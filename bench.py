@@ -273,9 +273,8 @@ def main() -> None:
     loads: dict[str, list] = {}
     load_start = os.getloadavg()[0]
 
-    # Headline = the production job's default mode (fused: the whole
-    # pipeline in one Arrow stage, jobs/extract.py --mode fused). The
-    # array mode (stage-1 UDF + native array exprs) is timed alongside
+    # Headline = the production path (fused: the whole pipeline in one
+    # Arrow stage, what jobs/extract.py runs). The array mode (stage-1 UDF + native array exprs) is timed alongside
     # for the composable path's regression signal.
     _run(lambda: extract_fused(parted))
     meter.start()

@@ -45,7 +45,7 @@ def main():
 
     fused_df = extract_fused(salted_repartition(add_part_id(pages, 16), 16, 4))
     sections.append((
-        "Fused extraction (--mode fused job default: salted repartition -> "
+        "Fused extraction (the production job: salted repartition -> "
         "one MapInPandas)",
         "The whole per-page pipeline in ONE Python stage emitting final "
         "columns — no ArrowEvalPython, no post-UDF HOF projections, the "

@@ -74,7 +74,6 @@ def run_daily(
     store_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    mode: str = "fused",
 ) -> dict:
     from pyspark.sql import functions as F
 
@@ -102,7 +101,7 @@ def run_daily(
         return stats
 
     # 2) sync the extracted table over the pages CDC window
-    sync = sync_extracted(spark, pages_dir, extracted_dir, mode=mode)
+    sync = sync_extracted(spark, pages_dir, extracted_dir)
     stats["extracted"] = {k: sync[k] for k in ("inserted", "deleted") if k in sync}
 
     # 3) admit against the signature store. The admission window is
@@ -203,7 +202,6 @@ def main(argv=None) -> int:
     ap.add_argument("--store", required=True)
     ap.add_argument("--output", required=True)
     ap.add_argument("--checkpoint", required=True)
-    ap.add_argument("--mode", default="fused", choices=["fused", "array", "relational"])
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -218,7 +216,6 @@ def main(argv=None) -> int:
         args.store,
         args.output,
         args.checkpoint,
-        mode=args.mode,
     )
     stats["wall_sec"] = round(time.time() - t0, 3)
     print(json.dumps(stats))

@@ -4,7 +4,7 @@ Usage:
     spark-submit --master local[N] --driver-memory 8g \
         --py-files dist/paddleocr_spark.zip \
         jobs/extract.py --input <pages.parquet> --output <dir> \
-        [--mode fused|array|relational] [--partitions 64] [--salt 8] [--resume]
+        [--partitions 64] [--salt 8] [--resume]
 
 (local mode hosts all executor threads in the driver JVM — size
 --driver-memory for the thread count; the 1g spark-submit default can
@@ -28,15 +28,6 @@ def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True, help="pages input: parquet path, warehouse dir, or WARC member file/dir (*.warc)")
     ap.add_argument("--output", required=True, help="output directory")
-    ap.add_argument(
-        "--mode",
-        default="fused",
-        choices=["fused", "array", "relational"],
-        help="fused: whole pipeline in one Arrow stage (throughput path, "
-        "default); array: stage-1 UDF + native array expressions "
-        "(composable path); relational: explode/window cross-check. "
-        "All three are byte-identical per url.",
-    )
     ap.add_argument("--partitions", type=int, default=32)
     ap.add_argument("--salt", type=int, default=8)
     ap.add_argument("--resume", action="store_true", help="anti-join completed partitions")
@@ -66,7 +57,6 @@ def main(argv=None) -> int:
         spark,
         input_path=args.input,
         output_dir=args.output,
-        mode=args.mode,
         n_partitions=args.partitions,
         salt=args.salt,
         resume=args.resume,

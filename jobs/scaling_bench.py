@@ -49,8 +49,7 @@ def build_zip() -> str:
 
 
 def run_once(cores: int, zpath: str, input_path: str, out_dir: str,
-             partitions: int, salt: int, pin: bool = False,
-             mode: str = "fused") -> dict:
+             partitions: int, salt: int, pin: bool = False) -> dict:
     if os.path.exists(out_dir):
         shutil.rmtree(out_dir)
     cmd = (["taskset", "-c", f"0-{cores - 1}"] if pin else []) + [
@@ -69,7 +68,6 @@ def run_once(cores: int, zpath: str, input_path: str, out_dir: str,
         "--output", out_dir,
         "--partitions", str(partitions),
         "--salt", str(salt),
-        "--mode", mode,
     ]
     load_before = os.getloadavg()[0]
     proc = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO, check=True)
@@ -118,9 +116,6 @@ def main() -> None:
                     help="override page count (cached under .data/pages)")
     ap.add_argument("--partitions", type=int, default=64)
     ap.add_argument("--salt", type=int, default=8)
-    ap.add_argument("--mode", default="fused",
-                    choices=["fused", "array", "relational"],
-                    help="extraction mode under test (the job default)")
     ap.add_argument("--update-baseline", action="store_true")
     ap.add_argument("--repeat", type=int, default=1,
                     help="run the pair K times; report per-leg MIN wall "
@@ -153,10 +148,10 @@ def main() -> None:
     for _ in range(max(args.repeat, 1)):
         runs_n.append(run_once(
             args.n, zpath, input_path, "/tmp/scale_n",
-            args.partitions, args.salt, args.pin, args.mode))
+            args.partitions, args.salt, args.pin))
         runs_4n.append(run_once(
             args.n * 4, zpath, input_path, "/tmp/scale_4n",
-            args.partitions, args.salt, args.pin, args.mode))
+            args.partitions, args.salt, args.pin))
     r_n = min(runs_n, key=lambda r: r["wall_sec"])
     r_4n = min(runs_4n, key=lambda r: r["wall_sec"])
 
@@ -172,7 +167,6 @@ def main() -> None:
         "docs_per_sec_4n": r_4n["docs_per_sec"],
         "scaling_efficiency": round(eff, 3),
         "repeat": max(args.repeat, 1),
-        "mode": args.mode,
         "all_walls_n": [r["wall_sec"] for r in runs_n],
         "all_walls_4n": [r["wall_sec"] for r in runs_4n],
         "loadavg": {

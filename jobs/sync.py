@@ -10,7 +10,7 @@ Each sync:
 - reads the pages table's changes since the last synced snapshot
   (``warehouse.read_changes``): recrawl upserts arrive as
   delete(old)+insert(new), takedowns as deletes;
-- runs the extraction pipeline (fused mode) over the INSERT rows only;
+- runs the fused extraction stage over the INSERT rows only;
 - applies them to the derived table with ``upsert`` (replace-by-key) and
   retracts the DELETE urls with ``delete_where`` — both replace/delete
   by key, so re-running an interrupted window is idempotent;
@@ -57,7 +57,6 @@ def sync_extracted(
     spark,
     pages_dir: str,
     extracted_dir: str,
-    mode: str = "fused",
     cfg=None,
 ) -> dict:
     """One sync step; returns stats. Safe to call when nothing changed
@@ -65,15 +64,10 @@ def sync_extracted(
     from pyspark.sql import functions as F
 
     from paddleocr_spark.config import DEFAULT
-    from paddleocr_spark.operators.extract import (
-        extract,
-        extract_fused,
-        extract_relational,
-    )
+    from paddleocr_spark.operators.extract import extract_fused
     from paddleocr_spark.sources import warehouse as W
 
     cfg = cfg or DEFAULT
-    fn = {"fused": extract_fused, "array": extract, "relational": extract_relational}[mode]
     to_snap = W.current_snapshot_id(pages_dir)
     if to_snap is None:
         raise ValueError(f"pages table {pages_dir} has no snapshots")
@@ -90,7 +84,7 @@ def sync_extracted(
     changes = changes.drop("day", "bucket").cache()
 
     ins = changes.filter(F.col("_change_type") == "insert")
-    ext = fn(ins, cfg).join(ins.select("url", "warc_ts"), "url")
+    ext = extract_fused(ins, cfg).join(ins.select("url", "warc_ts"), "url")
     n_ins = ext.count()
     if n_ins:
         W.upsert(ext, extracted_dir)
@@ -121,14 +115,13 @@ def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--pages", required=True, help="pages warehouse table dir")
     ap.add_argument("--extracted", required=True, help="derived extracted table dir")
-    ap.add_argument("--mode", default="fused", choices=["fused", "array", "relational"])
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
 
     spark = SparkSession.builder.appName("paddleocr-spark-sync").getOrCreate()
     t0 = time.time()
-    stats = sync_extracted(spark, args.pages, args.extracted, mode=args.mode)
+    stats = sync_extracted(spark, args.pages, args.extracted)
     stats["wall_sec"] = round(time.time() - t0, 3)
     print(json.dumps(stats))
     spark.stop()

@@ -19,7 +19,7 @@ __version__ = "0.1.0"
 _PUBLIC = {
     "Extractor": ("paddleocr_spark.api", "Extractor"),
     "extract": ("paddleocr_spark.operators.extract", "extract"),
-    "extract_relational": ("paddleocr_spark.operators.extract", "extract_relational"),
+    "extract_fused": ("paddleocr_spark.operators.extract", "extract_fused"),
     "run_extract_job": ("paddleocr_spark.plans.job", "run_extract_job"),
     "build_pipeline": ("paddleocr_spark.operators.registry", "build_pipeline"),
     "get_spark": ("paddleocr_spark.session", "get_spark"),

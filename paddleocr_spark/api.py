@@ -23,7 +23,6 @@ from __future__ import annotations
 import dataclasses
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from paddleocr_spark.config import DEFAULT, PipelineConfig
 from paddleocr_spark.operators import extract as X
@@ -71,11 +70,9 @@ class Extractor:
                       straight to the recognizer.
         """
         if det and rec:
-            return X.extract(df, self.cfg)
+            return X.extract_fused(df, self.cfg)
         if det:
-            d = X.scored_blocks(df, self.cfg)
-            d = d.withColumn("n_blocks_detected", F.size("blocks"))
-            return d.withColumn("dets", X._dets_col(self.cfg)).drop("blocks", "scored")
+            return X.detect(df, self.cfg).drop("blocks", "scored")
         if rec:
             if "dets" not in df.columns:
                 raise ValueError("rec-only input must carry a 'dets' column (det-only output)")

@@ -1,20 +1,20 @@
 """The extraction plan: detect -> filter -> CTC-collapse -> assemble.
 
-Two independent Spark realizations of the exact same semantics (both
-byte-identical to the pure-Python oracle, core/oracle.py — the pytest
-gate asserts all three agree):
+Two Spark realizations of the exact same semantics, both byte-identical
+to the pure-Python oracle (core/oracle.py; the pytest gate asserts all
+of them agree):
 
-- ``extract`` (array mode, the production path): after the stage-1 UDF,
-  EVERYTHING is per-row higher-order functions on the blocks array —
-  zero shuffles, embarrassingly parallel, the right shape for a
-  1000-executor cluster over 10^12 rows. The whole post-UDF plan is one
-  whole-stage-codegen projection.
+- ``extract_fused`` (the production path): the whole per-page pipeline
+  as ONE Arrow-batched mapInPandas stage running the oracle's
+  ``extract_page`` — the job default, and what streaming, the
+  ``Extractor`` facade and the registry's ``extract`` op run.
 
-- ``extract_relational`` (cross-check path): explode -> native filters
-  -> window (lag/run-id, the reference's adjacency dedup as a window,
-  SURVEY.md §2.5 rows-frame note) -> groupBy. Costs shuffles; exists to
-  cross-validate the array path and to demonstrate the relational
-  formulation of each operator.
+- ``extract`` (array mode, the Spark-native cross-check): after the
+  stage-1 UDF, everything is per-row higher-order functions on the
+  blocks array — zero shuffles, one whole-stage-codegen projection. It
+  is an independent second implementation of the post-detection
+  semantics, and its pieces (``detect``, ``_merge_runs``,
+  ``_assemble``) are the composable det-only / rec-only surface.
 
 Reference semantics sites are cited in core/oracle.py's docstring; the
 expression-level parity rules (IEEE double arithmetic on integer inputs,
@@ -23,7 +23,7 @@ identical operation order for means) are what make byte-identity hold.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from paddleocr_spark.config import DEFAULT, LATIN_RUN_CLASS, PipelineConfig
@@ -151,8 +151,8 @@ def _assemble(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     )
 
 
-def scored_blocks(df: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """url/lang/html -> url, lang, blocks, scored (array with score).
+def scored_col(cfg: PipelineConfig) -> Column:
+    """blocks -> scored: each block struct gains its detection score.
 
     score_mode='fast' scores over the block's full subtree counters
     (box_score_fast, db_postprocess.py:189-204); 'slow' over the
@@ -161,8 +161,7 @@ def scored_blocks(df: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame:
     min-size filter always uses the raw text_len, like the reference's
     side<=3 drop which is score-mode-independent."""
     slow = cfg.score_mode == "slow"
-    df = with_blocks(df.select("url", "lang", "html"), cfg)
-    scored = F.transform(
+    return F.transform(
         F.col("blocks"),
         lambda x: F.struct(
             x["block_id"].alias("block_id"),
@@ -178,7 +177,12 @@ def scored_blocks(df: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame:
             ).alias("score"),
         ),
     )
-    return df.withColumn("scored", scored)
+
+
+def scored_blocks(df: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame:
+    """url/lang/html -> url, lang, blocks, scored (array with score)."""
+    df = with_blocks(df.select("url", "lang", "html"), cfg)
+    return df.withColumn("scored", scored_col(cfg))
 
 
 def _dets_col(cfg: PipelineConfig) -> Column:
@@ -194,13 +198,17 @@ def _dets_col(cfg: PipelineConfig) -> Column:
     return F.slice(kept, 1, cfg.max_candidates)
 
 
-def extract(df: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Production path: zero-shuffle, per-row higher-order functions."""
+def detect(df: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame:
+    """url/lang/html -> scored_blocks + n_blocks_detected + dets (the
+    filtered candidate array): the det half of the array plan."""
     d = scored_blocks(df, cfg)
     d = d.withColumn("n_blocks_detected", F.size("blocks"))
-    d = d.withColumn("dets", _dets_col(cfg))
-    d = _merge_runs(d, cfg)
-    return _assemble(d, cfg)
+    return d.withColumn("dets", _dets_col(cfg))
+
+
+def extract(df: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame:
+    """Array mode: zero-shuffle, per-row higher-order functions."""
+    return _assemble(_merge_runs(detect(df, cfg), cfg), cfg)
 
 
 FUSED_SCHEMA = (
@@ -228,10 +236,9 @@ def extract_fused(df: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame:
     and far flatter degradation under host contention (the work sits in
     the Python worker pool, not 32 JVM threads of HOF eval).
 
-    Use `extract` when downstream stages consume the blocks/scored
-    arrays relationally in the same job; use this when the job's output
-    IS the extraction (the 100 TB corpus pass). Both are byte-identical
-    per url (test_extract_e2e gate)."""
+    Every production caller runs this stage; `extract` stays as the
+    Spark-native cross-check and the det-only/rec-only surface. Both
+    are byte-identical per url (test_extract_e2e gate)."""
     from paddleocr_spark.core.oracle import extract_page
 
     def run(batches):
@@ -262,80 +269,3 @@ def extract_fused(df: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame:
     if cfg.sort_by_len:
         cols = cols.sortWithinPartitions(F.length("html"))
     return cols.mapInPandas(run, FUSED_SCHEMA)
-
-
-def extract_relational(df: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Cross-check path: explode -> filter -> window -> groupBy.
-
-    PRECONDITION: url is unique in ``df``. The windows and the final
-    rollup key on url, so duplicate input urls would interleave both
-    rows' blocks into one span stream and fan the merged result onto
-    every base row — unlike the array/fused paths, which process rows
-    independently. The production pipeline guarantees uniqueness (the
-    warehouse upsert / latest_crawl rule); apply ``latest_crawl``
-    first when feeding raw multi-capture crawls."""
-    d = scored_blocks(df, cfg)
-    base = d.select("url", "lang", F.size("blocks").alias("n_blocks_detected"))
-
-    e = d.select("url", F.explode("scored").alias("b")).select("url", "b.*")
-    e = e.filter(
-        (F.col("score") > F.lit(cfg.det_thresh))
-        & (F.col("score") >= F.lit(cfg.det_box_thresh))
-        & (F.col("text_len") > F.lit(cfg.min_text_len))
-    )
-    w = Window.partitionBy("url").orderBy("block_id")
-    e = e.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= cfg.max_candidates
-    )
-    prev_text = F.lag("text").over(w)
-    e = e.withColumn(
-        "new_run",
-        (prev_text.isNull() | (prev_text != F.col("text"))).cast("int"),
-    )
-    e = e.withColumn(
-        "span_id",
-        F.sum("new_run").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-    )
-
-    g = e.groupBy("url", "span_id").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct("block_id", "start", "end", "score", "text", "parent_id")
-            )
-        ).alias("run")
-    )
-    run = F.col("run")
-    first = F.get(run, 0)
-    g = g.select(
-        "url",
-        F.struct(
-            first["block_id"].alias("block_id"),
-            first["start"].alias("start"),
-            F.aggregate(run, first["end"], lambda m, x: F.greatest(m, x["end"])).alias(
-                "end"
-            ),
-            (
-                F.aggregate(run, F.lit(0.0), lambda a, x: a + x["score"]) / F.size(run)
-            ).alias("score"),
-            first["text"].alias("text"),
-            first["parent_id"].alias("parent_id"),
-        ).alias("span"),
-    )
-    g = g.filter(
-        (F.col("span")["text"] != "") & (F.col("span")["score"] >= F.lit(cfg.drop_score))
-    )
-    per_url = g.groupBy("url").agg(
-        F.sort_array(F.collect_list("span")).alias("mspans")
-    )
-
-    joined = base.join(per_url, "url", "left").withColumn(
-        "mspans",
-        F.coalesce(
-            F.col("mspans"),
-            F.array().cast(
-                "array<struct<block_id:int,start:int,end:int,score:double,"
-                "text:string,parent_id:int>>"
-            ),
-        ),
-    )
-    return _assemble(joined, cfg)

@@ -53,25 +53,9 @@ def _detect_blocks(**params) -> Stage:
 
 def _score_blocks(**params) -> Stage:
     cfg = _cfg(params)
-
-    def stage(df: DataFrame) -> DataFrame:
-        scored = F.transform(
-            F.col("blocks"),
-            lambda x: F.struct(
-                x["block_id"].alias("block_id"),
-                x["start"].alias("start"),
-                x["end"].alias("end"),
-                x["text"].alias("text"),
-                x["parent_id"].alias("parent_id"),
-                x["text_len"].alias("text_len"),
-                X.score_expr(x["text_len"], x["link_text_len"], cfg.score_k).alias("score"),
-            ),
-        )
-        return df.withColumn("scored", scored).withColumn(
-            "n_blocks_detected", F.size("blocks")
-        )
-
-    return stage
+    return lambda df: df.withColumn("scored", X.scored_col(cfg)).withColumn(
+        "n_blocks_detected", F.size("blocks")
+    )
 
 
 def _filter_candidates(**params) -> Stage:
@@ -91,7 +75,7 @@ def _assemble(**params) -> Stage:
 
 def _extract(**params) -> Stage:
     cfg = _cfg(params)
-    return lambda df: X.extract(df, cfg)
+    return lambda df: X.extract_fused(df, cfg)
 
 
 REGISTRY: dict[str, Callable[..., Stage]] = {

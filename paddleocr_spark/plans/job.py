@@ -36,13 +36,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from paddleocr_spark.config import DEFAULT, PipelineConfig
-from paddleocr_spark.operators.extract import (
-    extract,
-    extract_fused,
-    extract_relational,
-)
+from paddleocr_spark.operators.extract import extract, extract_fused
 
 SALT_SEED = 42
+
+# fused is the production stage; array is its Spark-native cross-check
+_EXTRACTORS = {"fused": extract_fused, "array": extract}
 
 
 def add_part_id(df: DataFrame, n_partitions: int) -> DataFrame:
@@ -148,7 +147,9 @@ def run_extract_job(
     wet_out: str | None = None,
     wet_gz: bool = False,
 ) -> dict:
-    """Run extraction with checkpoint/resume. ``only_first_parts`` is a
+    """Run extraction with checkpoint/resume. ``mode`` picks the
+    realization: ``"fused"`` (the production stage) or ``"array"`` (the
+    Spark-native cross-check). ``only_first_parts`` is a
     test hook simulating a mid-job failure after k partitions.
     ``blocked_hosts`` prunes blocklisted hosts before any parsing
     (apply_host_blocklist).
@@ -159,6 +160,8 @@ def run_extract_job(
     crawl, not the whole table. Point a delta run at its own output dir
     — partitions are overwritten whole, so mixing a delta into a full
     run's output would drop that run's co-partitioned rows."""
+    if mode not in _EXTRACTORS:
+        raise ValueError(f"mode must be one of {sorted(_EXTRACTORS)}, got {mode!r}")
     if since_snapshot is not None and not _is_warehouse(input_path):
         raise ValueError("--since-snapshot requires a warehouse table input")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -216,8 +219,7 @@ def run_extract_job(
 
     pages = salted_repartition(pages, n_partitions, salt)
 
-    fn = {"array": extract, "fused": extract_fused, "relational": extract_relational}[mode]
-    ext = fn(pages, cfg)
+    ext = _EXTRACTORS[mode](pages, cfg)
     # recompute from url post-extract: no extra shuffle, no UDF re-run
     ext = add_part_id(ext, n_partitions)
 

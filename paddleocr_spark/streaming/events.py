@@ -3,8 +3,8 @@
 Batch/stream parity by construction: both paths call the same
 transformation functions, so the streaming results must equal the batch
 results on the same input (asserted in tests/test_streaming.py). This
-mirrors how the engine's extraction stages are pure per-row functions —
-`extract()` is stateless and runs under readStream unmodified.
+mirrors how the engine's extraction stage is a pure per-row function —
+`extract_fused()` is stateless and runs under readStream unmodified.
 
 Scale notes:
 - watermark 2h bounds state for late data; window+event_type grouping
@@ -29,7 +29,7 @@ from pyspark.sql.types import (
 )
 
 from paddleocr_spark.config import DEFAULT, PipelineConfig
-from paddleocr_spark.operators.extract import extract
+from paddleocr_spark.operators.extract import extract_fused
 
 EVENTS_SCHEMA = StructType(
     [
@@ -129,10 +129,11 @@ def run_extract_stream(
     query_name: str = "extract_stream",
     cfg: PipelineConfig = DEFAULT,
 ) -> "DataFrame":
-    """Streaming extraction: the SAME extract() pipeline under
-    readStream (stateless per-row stages -> no state store at all)."""
+    """Streaming extraction: the batch job's fused ``extract_fused``
+    stage under readStream (stateless per-row work -> no state store
+    at all)."""
     pages = spark.readStream.schema(PAGES_SCHEMA).parquet(pages_dir)
-    out = extract(pages.select("url", "lang", "html"), cfg)
+    out = extract_fused(pages, cfg)
     q = (
         out.writeStream.format("memory")
         .queryName(query_name)
@@ -151,17 +152,17 @@ def run_extract_stream_filesink(
     checkpoint_dir: str,
     cfg: PipelineConfig = DEFAULT,
 ) -> None:
-    """Production-shaped incremental extraction: file source -> extract
-    -> parquet FILE sink with a checkpoint. The file sink's commit log
-    + the source's processed-files log give exactly-once across
-    restarts: re-running with the same checkpoint processes ONLY files
-    that appeared since the last run (the streaming twin of the batch
-    lineage/anti-join resume, plans/job.py). availableNow: drains
-    what's currently there, then stops — the incremental-backfill
-    trigger."""
+    """Production-shaped incremental extraction: file source ->
+    extract_fused -> parquet FILE sink with a checkpoint. The file
+    sink's commit log + the source's processed-files log give
+    exactly-once across restarts: re-running with the same checkpoint
+    processes ONLY files that appeared since the last run (the
+    streaming twin of the batch lineage/anti-join resume,
+    plans/job.py). availableNow: drains what's currently there, then
+    stops — the incremental-backfill trigger."""
     pages = spark.readStream.schema(PAGES_SCHEMA).parquet(pages_dir)
     q = (
-        extract(pages, cfg)
+        extract_fused(pages, cfg)
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)

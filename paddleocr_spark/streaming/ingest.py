@@ -122,8 +122,8 @@ def extract_pages_stream_warehouse(
     checkpoint_dir: str,
 ) -> None:
     """Streaming extraction straight into a snapshot table: crawl files
-    arrive -> the SAME batch ``extract()`` pipeline runs on each
-    micro-batch -> results commit as warehouse snapshots, exactly-once
+    arrive -> the batch job's fused ``extract_fused`` stage runs on
+    each micro-batch -> results commit as warehouse snapshots, exactly-once
     via the batch-id guard. ``warc_ts`` is joined back from the
     micro-batch (the extraction stages carry url/lang/html only) so
     the extracted table gets the same ``days(warc_ts)``/``bucket(url)``
@@ -139,15 +139,13 @@ def extract_pages_stream_warehouse(
     so a continuously-draining extractor never changes the rows a
     training-data job sees mid-run.
     """
-    from paddleocr_spark.operators.extract import extract
+    from paddleocr_spark.operators.extract import extract_fused
 
     def _extract_commit(batch_df, batch_id: int) -> None:
         from paddleocr_spark.sources.readers import latest_crawl
 
         latest = latest_crawl(batch_df)
-        out = extract(latest.select("url", "lang", "html")).join(
-            latest.select("url", "warc_ts"), "url"
-        )
+        out = extract_fused(latest).join(latest.select("url", "warc_ts"), "url")
         idempotent_append(out, batch_id, table_dir)
 
     src = spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)

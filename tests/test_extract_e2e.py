@@ -8,11 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from paddleocr_spark.operators.extract import (
-    extract,
-    extract_fused,
-    extract_relational,
-)
+from paddleocr_spark.operators.extract import extract, extract_fused
 
 
 @pytest.fixture(scope="module")
@@ -37,10 +33,6 @@ def _assert_full_match(res, golden):
 
 def test_array_mode_byte_identical(pages, golden):
     _assert_full_match(extract(pages), golden)
-
-
-def test_relational_mode_byte_identical(pages, golden):
-    _assert_full_match(extract_relational(pages), golden)
 
 
 def test_fused_mode_byte_identical(pages, golden):

@@ -106,27 +106,10 @@ def test_partition_balance_under_host_skew(spark, smoke_dir, tmp_path):
     assert min(counts) > 0 and max(counts) < 3 * (sum(counts) / len(counts))
 
 
-def test_relational_mode_job_identical_output(spark, smoke_dir, tmp_path):
-    """The --mode relational job (explode/filter/window/groupBy path)
-    writes a table identical to the array-mode job — the cross-check
-    the two extract() implementations promise, proven at the job
-    surface (partitioned write + lineage included)."""
-    inp = os.path.join(smoke_dir, "pages.parquet")
-    a_dir = str(tmp_path / "array_mode")
-    r_dir = str(tmp_path / "relational_mode")
-
-    a = run_extract_job(spark, inp, a_dir, mode="array", n_partitions=4, salt=2)
-    r = run_extract_job(spark, inp, r_dir, mode="relational", n_partitions=4, salt=2)
-    assert a["rows_out"] == r["rows_out"] > 0
-
-    ra = _read_sorted(spark, a_dir)
-    rr = _read_sorted(spark, r_dir)
-    assert [tuple(x) for x in ra] == [tuple(x) for x in rr]
-
-
 def test_fused_mode_job_identical_output(spark, smoke_dir, tmp_path):
-    """--mode fused (the default, single Arrow stage) writes a table
-    identical to the array-mode job at the job surface."""
+    """mode="fused" (the default, single Arrow stage) writes a table
+    identical to the mode="array" cross-check job at the job surface
+    (partitioned write + lineage included)."""
     inp = os.path.join(smoke_dir, "pages.parquet")
     a_dir = str(tmp_path / "array_mode")
     f_dir = str(tmp_path / "fused_mode")

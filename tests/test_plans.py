@@ -36,17 +36,25 @@ def test_extract_single_arrow_udf_no_row_python(spark, smoke_dir):
 def test_extract_fused_single_python_stage(spark, smoke_dir):
     """Fused mode: exactly ONE Python stage (MapInPandas) carrying the
     whole pipeline, no ArrowEvalPython, no row-wise Python, and no
-    exchange introduced by the operator itself."""
+    exchange introduced by the operator itself. The Extractor facade
+    and the registry's extract op must route to that same stage."""
     import os
 
+    from paddleocr_spark.api import Extractor
     from paddleocr_spark.operators.extract import extract_fused
+    from paddleocr_spark.operators.registry import build_pipeline
 
     pages = spark.read.parquet(os.path.join(smoke_dir, "pages.parquet"))
-    plan = _plan(extract_fused(pages))
-    assert plan.count("MapInPandas") == 1
-    assert "ArrowEvalPython" not in plan
-    assert "BatchEvalPython" not in plan
-    assert "Exchange" not in plan  # narrow: partitioning comes from input
+    for name, out in (
+        ("extract_fused", extract_fused(pages)),
+        ("Extractor", Extractor()(pages)),
+        ("registry", build_pipeline([{"op": "extract"}])(pages)),
+    ):
+        plan = _plan(out)
+        assert plan.count("MapInPandas") == 1, name
+        assert "ArrowEvalPython" not in plan, name
+        assert "BatchEvalPython" not in plan, name
+        assert "Exchange" not in plan, name  # narrow: partitioning from input
 
 
 def test_region_revenue_broadcasts_dims(spark):

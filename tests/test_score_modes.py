@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from paddleocr_spark.config import DEFAULT, PipelineConfig
 from paddleocr_spark.core.oracle import extract_page
 from paddleocr_spark.operators.extract import extract
+from paddleocr_spark.operators.registry import DEFAULT_PIPELINE_SPEC, build_pipeline
 
 SLOW = PipelineConfig(score_mode="slow")
 
@@ -47,12 +48,16 @@ def test_slow_mode_spark_matches_oracle(spark):
         "url string, html binary, lang string",
     )
     for cfg in (DEFAULT, SLOW):
-        got = {
-            r["url"]: r["extracted_text"]
-            for r in extract(df, cfg).collect()
-        }
         want = {u: extract_page(u, h, l, cfg).extracted_text for u, h, l in _PAGES}
-        assert got == want, cfg.score_mode
+        spec = [
+            {**stage, "score_mode": cfg.score_mode} for stage in DEFAULT_PIPELINE_SPEC
+        ]
+        for name, out in (
+            ("extract", extract(df, cfg)),
+            ("registry", build_pipeline(spec)(df)),
+        ):
+            got = {r["url"]: r["extracted_text"] for r in out.collect()}
+            assert got == want, (name, cfg.score_mode)
 
 
 def test_sort_by_len_output_identical(spark, smoke_dir):
