@@ -28,6 +28,7 @@ Scale notes (100 TB framing):
   shuffle join on the shared key when it doesn't.
 
 Usage:
+    rm -f dist/paddleocr_spark.zip && zip -qr dist/paddleocr_spark.zip paddleocr_spark -x '*__pycache__*'
     spark-submit --master local[N] \
         --py-files dist/paddleocr_spark.zip jobs/crawl_plan.py \
         --input <documents.parquet> --output <dir> [--budget 100] \

@@ -31,6 +31,7 @@ marker re-appends the same signature rows; duplicates in the store
 are semantically harmless (every probe is a set operation).
 
 Usage:
+    rm -f dist/paddleocr_spark.zip && zip -qr dist/paddleocr_spark.zip paddleocr_spark -x '*__pycache__*'
     spark-submit --py-files dist/paddleocr_spark.zip jobs/daily.py \
         --landing <dir> --pages <tbl> --extracted <tbl> \
         --store <dir> --output <dir> --checkpoint <dir>

@@ -19,6 +19,7 @@ Scale notes (100 TB framing):
   (shared storage) — required on a real multi-executor cluster.
 
 Usage:
+    rm -f dist/paddleocr_spark.zip && zip -qr dist/paddleocr_spark.zip paddleocr_spark -x '*__pycache__*'
     spark-submit --master local[N] --driver-memory 8g \
         --py-files dist/paddleocr_spark.zip jobs/dedup.py \
         --input <documents.parquet> --output <dir> \

@@ -1,6 +1,7 @@
 """Batch extraction job — the ``spark-submit --py-files`` entrypoint.
 
 Usage:
+    rm -f dist/paddleocr_spark.zip && zip -qr dist/paddleocr_spark.zip paddleocr_spark -x '*__pycache__*'
     spark-submit --master local[N] --driver-memory 8g \
         --py-files dist/paddleocr_spark.zip \
         jobs/extract.py --input <pages.parquet> --output <dir> \

@@ -4,6 +4,7 @@ landed, fold their crawled keys into the known store and their
 never-seen outlink targets into the frontier store, and print the
 frontier summary the fetch planner (jobs/crawl_plan.py) consumes.
 
+    rm -f dist/paddleocr_spark.zip && zip -qr dist/paddleocr_spark.zip paddleocr_spark -x '*__pycache__*'
     spark-submit --py-files dist/paddleocr_spark.zip jobs/frontier.py \
         --pages <dir of page parquet files> --store <state dir>
 

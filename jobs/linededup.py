@@ -12,6 +12,7 @@ re-reading the corpus. Re-running an applied batch-id is a no-op for
 the counts and a deterministic re-emission of the same rewrite.
 
 Usage:
+    rm -f dist/paddleocr_spark.zip && zip -qr dist/paddleocr_spark.zip paddleocr_spark -x '*__pycache__*'
     spark-submit --py-files dist/paddleocr_spark.zip jobs/linededup.py \
         --input <documents.parquet> --store <dir> --output <dir> \
         --batch-id <unique id, e.g. the crawl day> \

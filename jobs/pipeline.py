@@ -39,6 +39,7 @@ as one resumable Spark job):
                  row counts, retention, input snapshot and run id
 
 Usage:
+    rm -f dist/paddleocr_spark.zip && zip -qr dist/paddleocr_spark.zip paddleocr_spark -x '*__pycache__*'
     spark-submit --master local[N] --driver-memory 8g \
         --py-files dist/paddleocr_spark.zip jobs/pipeline.py \
         --input <pages.parquet | warehouse dir> --output <dir> \

@@ -10,6 +10,7 @@ is ~(n/k)²·L/2^b, never (n/k)². See semantic_dedup_scaled for the
 full scale analysis.
 
 Usage:
+    rm -f dist/paddleocr_spark.zip && zip -qr dist/paddleocr_spark.zip paddleocr_spark -x '*__pycache__*'
     spark-submit --py-files dist/paddleocr_spark.zip jobs/semdedup.py \
         --input <embeddings.parquet> --output <dir> \
         [--target-cluster-size 4096] [--tau 0.4] [--refine-iters 2] \

@@ -3,6 +3,7 @@ warehouse table in step with the pages warehouse table using changelog
 (CDC) reads — the 100 TB steady-state shape, where a daily recrawl +
 takedown batch costs the delta, never a corpus rescan.
 
+    rm -f dist/paddleocr_spark.zip && zip -qr dist/paddleocr_spark.zip paddleocr_spark -x '*__pycache__*'
     spark-submit --py-files dist/paddleocr_spark.zip jobs/sync.py \
         --pages <pages table dir> --extracted <derived table dir>
 

@@ -20,11 +20,9 @@ like the reference's CLI flags override the resolved model config.
 
 from __future__ import annotations
 
-import dataclasses
-
 from pyspark.sql import DataFrame
 
-from paddleocr_spark.config import DEFAULT, PipelineConfig
+from paddleocr_spark.config import with_overrides
 from paddleocr_spark.operators import extract as X
 
 # parse_lang analog (paddleocr.py:407-544): lang -> config preset.
@@ -52,13 +50,8 @@ class Extractor:
             raise ValueError(
                 f"unsupported lang {lang!r}; known: {sorted(LANG_PRESETS)}"
             )
-        params = {**LANG_PRESETS[lang], **overrides}
-        known = {f.name for f in dataclasses.fields(PipelineConfig)}
-        unknown = set(params) - known
-        if unknown:
-            raise ValueError(f"unknown config params: {sorted(unknown)}")
         self.lang = lang
-        self.cfg = dataclasses.replace(DEFAULT, **params)
+        self.cfg = with_overrides({**LANG_PRESETS[lang], **overrides})
 
     def __call__(self, df: DataFrame, det: bool = True, rec: bool = True) -> DataFrame:
         """ocr(img, det, rec) analog (paddleocr.py:674-762).

@@ -14,7 +14,7 @@ byte-identical (IEEE-754 double arithmetic on integer inputs in both).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, fields, replace
 
 
 @dataclass(frozen=True)
@@ -99,8 +99,29 @@ class PipelineConfig:
     # (box_score_slow: exact-polygon-mask mean, strict membership).
     score_mode: str = "fast"
 
+    def __post_init__(self):
+        # every scorer tests `== "slow"`, so any other value would
+        # silently score in fast mode
+        if self.score_mode not in ("fast", "slow"):
+            raise ValueError(
+                f"score_mode must be 'fast' or 'slow', got {self.score_mode!r}"
+            )
+
 
 DEFAULT = PipelineConfig()
+
+_FIELDS = frozenset(f.name for f in fields(PipelineConfig))
+
+
+def with_overrides(overrides: dict) -> PipelineConfig:
+    """DEFAULT with ``overrides`` applied — the one validator shared by
+    the registry, the ``Extractor`` facade and the serving endpoint. An
+    unknown field name or an invalid value raises ValueError."""
+    unknown = set(overrides) - _FIELDS
+    if unknown:
+        raise ValueError(f"unknown PipelineConfig params: {sorted(unknown)}")
+    return replace(DEFAULT, **overrides)
+
 
 # Whitespace class used EVERYWHERE (Python `re` and Spark/Java regex agree
 # on this explicit class; bare \s differs between the two engines).

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from paddleocr_spark.functions.textstats import shingles, sql_shingles
+from paddleocr_spark.functions.textstats import sql_shingles
 
 N_MINHASH = 8          # signature length
 LSH_BANDS = 4          # bands of N_MINHASH / LSH_BANDS rows each
@@ -118,10 +118,6 @@ def minhash_from_shingles(sh: Column, seed: int) -> Column:
     return F.array_min(
         F.transform(sh, lambda s: F.md5(F.concat(F.lit(f"{seed}|"), s)))
     )
-
-
-def minhash_sig(text: Column, seed: int, k: int = 3) -> Column:
-    return minhash_from_shingles(shingles(text, k), seed)
 
 
 def with_minhash(df: DataFrame, text_col: str = "text", n: int = N_MINHASH) -> DataFrame:
@@ -246,14 +242,6 @@ def jaccard_from_shingles(sa: Column, sb: Column) -> Column:
     inter = F.size(F.array_intersect(sa, sb)).cast("double")
     union = F.size(F.array_union(sa, sb)).cast("double")
     return inter / union
-
-
-def jaccard_ngram(text_a: Column, text_b: Column, k: int = 3) -> Column:
-    """Exact word-k-gram Jaccard similarity (the LSH verifier).
-    Inline-expression form; hot paths bind shingle columns first."""
-    return jaccard_from_shingles(
-        F.array_distinct(shingles(text_a, k)), F.array_distinct(shingles(text_b, k))
-    )
 
 
 # ---------------------------------------------------------------- SQL mirrors

@@ -335,30 +335,6 @@ def sql_topk_cosine_batch(
 # Banded multi-table LSH near-dup over embeddings (production path)
 # ------------------------------------------------------------------
 
-def plane_dot_t(a: Column, t: int, j: int, n_planes: int) -> Column:
-    """Hyperplane dot for plane j of table t (globally distinct plane
-    index => independent hash tables)."""
-    g = t * n_planes + j
-    return F.aggregate(
-        F.transform(
-            a,
-            lambda x, i: x.cast("double")
-            * (((i + 1) * (g + 3)) % 7 - 3).cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def lsh_bucket_t(a: Column, t: int, n_planes: int) -> Column:
-    acc = F.lit(0)
-    for j in range(n_planes):
-        acc = acc + F.when(plane_dot_t(a, t, j, n_planes) > 0, F.lit(1 << j)).otherwise(
-            F.lit(0)
-        )
-    return acc.cast("int")
-
-
 def embed_near_dup_pairs(
     df: DataFrame,
     id_col: str = "vec_id",

@@ -23,58 +23,48 @@ Example::
 
 from __future__ import annotations
 
-import dataclasses
 from collections.abc import Callable
 from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from paddleocr_spark.config import DEFAULT, PipelineConfig
+from paddleocr_spark.config import with_overrides
 from paddleocr_spark.operators import extract as X
 from paddleocr_spark.operators.detect_stage import with_blocks
 
 Stage = Callable[[DataFrame], DataFrame]
 
 
-def _cfg(params: dict) -> PipelineConfig:
-    known = {f.name for f in dataclasses.fields(PipelineConfig)}
-    overrides = {k: v for k, v in params.items() if k in known}
-    unknown = set(params) - known
-    if unknown:
-        raise ValueError(f"unknown PipelineConfig params: {sorted(unknown)}")
-    return dataclasses.replace(DEFAULT, **overrides)
-
-
 def _detect_blocks(**params) -> Stage:
-    cfg = _cfg(params)
+    cfg = with_overrides(params)
     return lambda df: with_blocks(df.select("url", "lang", "html"), cfg)
 
 
 def _score_blocks(**params) -> Stage:
-    cfg = _cfg(params)
+    cfg = with_overrides(params)
     return lambda df: df.withColumn("scored", X.scored_col(cfg)).withColumn(
         "n_blocks_detected", F.size("blocks")
     )
 
 
 def _filter_candidates(**params) -> Stage:
-    cfg = _cfg(params)
+    cfg = with_overrides(params)
     return lambda df: df.withColumn("dets", X._dets_col(cfg))
 
 
 def _merge_spans(**params) -> Stage:
-    cfg = _cfg(params)
+    cfg = with_overrides(params)
     return lambda df: X._merge_runs(df, cfg)
 
 
 def _assemble(**params) -> Stage:
-    cfg = _cfg(params)
+    cfg = with_overrides(params)
     return lambda df: X._assemble(df, cfg)
 
 
 def _extract(**params) -> Stage:
-    cfg = _cfg(params)
+    cfg = with_overrides(params)
     return lambda df: X.extract_fused(df, cfg)
 
 

@@ -90,11 +90,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _norm_expr(col):
-    """normalize_ws as a native expression (mirrors core.text.normalize_ws)."""
-    return F.trim(F.regexp_replace(col, WS_CLASS + "+", " "))
-
-
 _NORM_SQL = f"trim(regexp_replace({{c}}, '{WS_CLASS}+', ' ', 'g'))"
 
 

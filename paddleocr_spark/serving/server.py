@@ -42,32 +42,29 @@ Endpoints (module-per-task, mirroring deploy/hubserving/*):
 
   GET /health -> ``{"status": "ok"}``
 
-Errors: 400 for malformed JSON / unknown config keys / non-list
-``pages``; 404 for unknown routes; per-page decode errors are entries
-in ``results``, not request failures.
+Errors: 400 for a bad or negative ``Content-Length`` / malformed JSON /
+unknown config keys or invalid config values / non-list ``pages``; 404
+for unknown routes; per-page decode errors are entries in ``results``,
+not request failures.
 """
 
 from __future__ import annotations
 
 import base64
 import binascii
-import dataclasses
 import json
 import threading
 import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.request import Request, urlopen
 
-from ..config import DEFAULT, PipelineConfig
+from ..config import DEFAULT, PipelineConfig, with_overrides
 from ..core.kie import entity_label, link_key_values
 from ..core.oracle import detect_blocks_rows, extract_page
 from ..core.tokenizer import tokenize_page
 
 # hubserving's default port (deploy/hubserving/readme_en.md: 8866).
 DEFAULT_PORT = 8866
-
-_CFG_FIELDS = {f.name for f in dataclasses.fields(PipelineConfig)}
-
 
 class BadRequest(ValueError):
     """400-class client error."""
@@ -78,10 +75,10 @@ def _parse_config(overrides: dict | None) -> PipelineConfig:
         return DEFAULT
     if not isinstance(overrides, dict):
         raise BadRequest("config must be an object")
-    unknown = set(overrides) - _CFG_FIELDS
-    if unknown:
-        raise BadRequest(f"unknown config fields: {sorted(unknown)}")
-    return dataclasses.replace(DEFAULT, **overrides)
+    try:
+        return with_overrides(overrides)
+    except ValueError as e:
+        raise BadRequest(str(e)) from e
 
 
 def _decode_page(page: dict) -> tuple[str, bytes, str]:
@@ -218,6 +215,8 @@ class _Handler(BaseHTTPRequestHandler):
         # engine-side ValueErrors and mislabel server bugs as 400s
         try:
             n = int(self.headers.get("Content-Length", 0))
+            if n < 0:  # rfile.read(-1) would block until the client hangs up
+                raise ValueError(f"negative length {n}")
         except ValueError as e:
             self._reply(400, dict(error=f"bad Content-Length: {e}"))
             return

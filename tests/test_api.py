@@ -23,6 +23,8 @@ def test_unknown_lang_and_param_fail_fast():
         Extractor(lang="xx")
     with pytest.raises(ValueError):
         Extractor(lang="en", not_a_param=1)
+    with pytest.raises(ValueError, match="score_mode"):
+        Extractor(lang="en", score_mode="Slow")
 
 
 def test_full_det_rec_roundtrip_matches_extract(spark, smoke_dir):

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import math
 import random
+from itertools import takewhile
 
 from pyspark.sql import functions as F
 
@@ -107,7 +108,8 @@ def test_semantic_dedup_keeps_one_of_planted_pair(spark):
         [(i, [float(x) for x in v]) for i, v in rows],
         "vec_id bigint, embedding array<float>",
     )
-    out = semantic_dedup(df, k=4, tau=0.95).collect()
+    res = semantic_dedup(df, k=4, tau=0.95)
+    out = res.collect()
     assert len(out) == len(rows)
     by_id = {r["vec_id"]: r for r in out}
     for a, b in planted:
@@ -120,6 +122,18 @@ def test_semantic_dedup_keeps_one_of_planted_pair(spark):
     # collide, so drops are exactly the planted halves
     n_dropped = sum(1 for r in out if r["kept"] == 0)
     assert n_dropped == len(planted)
+    # cluster assignment is a pure per-row projection (the literal-
+    # centroid argmax): no Exchange or Window below any node computing it
+    lines = res._jdf.queryExecution().executedPlan().toString().splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    argmax = [i for i, line in enumerate(lines) if "array_max(" in line]
+    assert argmax, lines
+    for i in argmax:
+        below = takewhile(lambda ln: depth(ln) > depth(lines[i]), lines[i + 1:])
+        assert not any("Exchange" in ln or "Window" in ln for ln in below), lines
 
 
 def test_kmeans_refine_recovers_planted_clusters(spark):

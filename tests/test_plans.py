@@ -7,10 +7,13 @@ scale must be visible in the plan, not just hoped for.
 - star joins broadcast their dims (no fact-table shuffle);
 - column pruning reaches the parquet scan (ReadSchema excludes unused
   columns — 'never read html when only counting');
-- predicate pushdown reaches the scan (PushedFilters).
+- predicate pushdown reaches the scan (PushedFilters);
+- exact top-k is TakeOrderedAndProject, never a global Sort.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import functions as F
 
@@ -61,6 +64,14 @@ def test_region_revenue_broadcasts_dims(spark):
     plan = _plan(Q.q_region_revenue(spark, SF_DIR))
     assert plan.count("BroadcastHashJoin") == 3
     assert "SortMergeJoin" not in plan
+
+
+def test_top_customers_take_ordered_no_global_sort(spark):
+    """orderBy + limit plans as TakeOrderedAndProject (per-partition
+    heaps merged on the driver), not a global Sort of every customer."""
+    plan = _plan(Q.q_top_customers(spark, SF_DIR))
+    assert "TakeOrderedAndProject" in plan
+    assert not re.search(r"\bSort \[.*\], true", plan), plan
 
 
 def test_token_stats_prunes_columns(spark):

@@ -52,6 +52,8 @@ def test_registry_unknown_op_fails_fast():
         build_pipeline([{"op": "nope"}])
     with pytest.raises(ValueError, match="unknown PipelineConfig"):
         build_pipeline([{"op": "extract", "not_a_param": 1}])
+    with pytest.raises(ValueError, match="score_mode"):
+        build_pipeline([{"op": "score_blocks", "score_mode": "Slow"}])
 
 
 def test_jsonl_source_roundtrip(spark, pages, tmp_path):

@@ -13,7 +13,9 @@ from __future__ import annotations
 
 import dataclasses
 import json
+import socket
 import urllib.error
+import urllib.parse
 import urllib.request
 
 import pytest
@@ -134,6 +136,13 @@ def test_protocol_errors(endpoint):
         json.dumps(dict(pages=[], config=dict(bogus_knob=1))).encode(),
     )
     assert code == 400 and "bogus_knob" in out["error"]
+    # mistyped score_mode -> 400, not silently fast-mode text
+    code, out = _post_raw(
+        endpoint,
+        "/predict/extract_system",
+        json.dumps(dict(pages=[], config=dict(score_mode="Slow"))).encode(),
+    )
+    assert code == 400 and "score_mode" in out["error"]
     # pages not a list -> 400
     code, out = _post_raw(
         endpoint, "/predict/extract_system", json.dumps(dict(pages="x")).encode()
@@ -155,6 +164,22 @@ def test_protocol_errors_hardened(endpoint):
         endpoint, "/predict/extract_system", b"\xff\xfe\x00bad"
     )
     assert code == 400 and "UTF-8" in out["error"]
+    # negative Content-Length -> 400 JSON; rfile.read(-1) would block the
+    # handler thread until the client hangs up. Raw socket: urllib
+    # cannot send a negative length, and the timeout turns a hang into
+    # a failure.
+    host, port = urllib.parse.urlsplit(endpoint).netloc.split(":")
+    with socket.create_connection((host, int(port)), timeout=10) as sock:
+        sock.sendall(
+            b"POST /predict/extract_system HTTP/1.1\r\nHost: x\r\n"
+            b"Content-Length: -1\r\nConnection: close\r\n\r\n"
+        )
+        raw = b""
+        while chunk := sock.recv(65536):
+            raw += chunk
+    head, _, payload = raw.partition(b"\r\n\r\n")
+    assert b" 400 " in head.split(b"\r\n")[0], raw
+    assert "Content-Length" in json.loads(payload)["error"]
     # unexpected handler exception -> 500 JSON (patch a route to blow up)
     from paddleocr_spark.serving import server as srv
 
