@@ -23,7 +23,7 @@ Usage:
     spark-submit --master local[N] --driver-memory 8g \
         --py-files dist/paddleocr_spark.zip jobs/dedup.py \
         --input <documents.parquet> --output <dir> \
-        [--algorithm twophase] [--checkpoint-dir <dir>]
+        [--checkpoint-dir <dir>]
 
 Prints ONE JSON line with input/exact-dup/near-dup/output counts.
 """
@@ -43,8 +43,7 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 
-def build_dedup(spark, docs, algorithm: str = "propagation",
-                checkpoint_dir: str | None = None,
+def build_dedup(spark, docs, checkpoint_dir: str | None = None,
                 winner: str = "min_id"):
     """Assemble the dedup plan; returns (exact, clusters, corpus)
     DataFrames (nothing executed). Split out of main() so tests can
@@ -55,28 +54,16 @@ def build_dedup(spark, docs, algorithm: str = "propagation",
     from pyspark.sql import functions as F
 
     from paddleocr_spark.functions import dedup
-    from paddleocr_spark.functions.graph import (
-        connected_components,
-        connected_components_two_phase,
-    )
+    from paddleocr_spark.functions.graph import connected_components
 
     # 1) exact dedup: keep min doc_id per content hash
-    hashed = docs.withColumn("__h", dedup.content_hash(F.col("text")))
-    w = Window.partitionBy("__h").orderBy("doc_id")
-    exact = (
-        hashed.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__h")
-    )
+    exact = dedup.exact_keepers(
+        docs.withColumn("__h", dedup.content_hash(F.col("text"))), "__h"
+    ).drop("__h")
 
     # 2) near-dup clusters over the exact-deduped survivors
     pairs = dedup.lsh_candidate_pairs(exact)
-    cc_fn = (
-        connected_components_two_phase
-        if algorithm == "twophase"
-        else connected_components
-    )
-    clusters = cc_fn(pairs, checkpoint_dir=checkpoint_dir).select(
+    clusters = connected_components(pairs, checkpoint_dir=checkpoint_dir).select(
         F.col("id").alias("doc_id"), "cluster_id"
     )
 
@@ -109,7 +96,6 @@ def build_dedup(spark, docs, algorithm: str = "propagation",
 
 
 def build_incremental_dedup(spark, base, new,
-                            algorithm: str = "propagation",
                             checkpoint_dir: str | None = None):
     """Incremental (daily-crawl) dedup: admit only those NEW documents
     that are not exact or near duplicates of the existing corpus or of
@@ -129,29 +115,15 @@ def build_incremental_dedup(spark, base, new,
     production deployment materializes the corpus band table once and
     appends to it incrementally (same join, ~|new| band rows probed).
     """
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from paddleocr_spark.functions import dedup
-    from paddleocr_spark.functions.graph import (
-        connected_components,
-        connected_components_two_phase,
-    )
-
-    cc_fn = (
-        connected_components_two_phase
-        if algorithm == "twophase"
-        else connected_components
-    )
+    from paddleocr_spark.functions.graph import connected_components
 
     # 1) exact: de-dup within the batch (min doc_id per hash), then
     #    drop anything whose content hash already exists in the corpus
-    new_hashed = new.withColumn("__h", dedup.content_hash(F.col("text")))
-    w = Window.partitionBy("__h").orderBy("doc_id")
-    new_exact = (
-        new_hashed.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    new_exact = dedup.exact_keepers(
+        new.withColumn("__h", dedup.content_hash(F.col("text"))), "__h"
     )
     base_hashes = base.select(
         dedup.content_hash(F.col("text")).alias("__h")
@@ -165,7 +137,7 @@ def build_incremental_dedup(spark, base, new,
         new_exact.select("doc_id", "text")
     )
     pairs = dedup.lsh_candidate_pairs(combined)
-    cc = cc_fn(pairs, checkpoint_dir=checkpoint_dir)
+    cc = connected_components(pairs, checkpoint_dir=checkpoint_dir)
     # shared admission rule (functions/dedup.cc_admitted_new_ids): a
     # clustered new doc survives iff its component is corpus-free and
     # it is the representative. Base side is O(corpus): NOT broadcast.
@@ -184,9 +156,6 @@ def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True, help="documents parquet (doc_id, text, ...)")
     ap.add_argument("--output", required=True)
-    ap.add_argument(
-        "--algorithm", default="propagation", choices=["propagation", "twophase"]
-    )
     ap.add_argument(
         "--checkpoint-dir", default=None,
         help="reliable checkpoint dir for the CC fixpoint (use on a real cluster)",
@@ -234,7 +203,7 @@ def main(argv=None) -> int:
         if not S.store_exists(args.store):
             # day 0: full self-dedup, then seed the store
             _, _, corpus = build_dedup(
-                spark, docs, args.algorithm, checkpoint_dir=args.checkpoint_dir,
+                spark, docs, checkpoint_dir=args.checkpoint_dir,
                 winner=args.winner,
             )
             corpus.write.mode("overwrite").parquet(f"{args.output}/corpus")
@@ -244,7 +213,6 @@ def main(argv=None) -> int:
         else:
             survivors = S.incremental_dedup_against_store(
                 spark, args.store, docs, checkpoint_dir=args.checkpoint_dir,
-                algorithm=args.algorithm,
             )
             survivors.write.mode("overwrite").parquet(f"{args.output}/corpus")
             admitted = spark.read.parquet(f"{args.output}/corpus")
@@ -262,8 +230,7 @@ def main(argv=None) -> int:
     if args.base:
         base = spark.read.parquet(args.base)
         survivors = build_incremental_dedup(
-            spark, base, docs, algorithm=args.algorithm,
-            checkpoint_dir=args.checkpoint_dir,
+            spark, base, docs, checkpoint_dir=args.checkpoint_dir,
         )
         survivors.write.mode("overwrite").parquet(f"{args.output}/corpus")
         n_out = spark.read.parquet(f"{args.output}/corpus").count()
@@ -282,7 +249,7 @@ def main(argv=None) -> int:
         return 0
 
     exact, clusters, corpus = build_dedup(
-        spark, docs, args.algorithm, checkpoint_dir=args.checkpoint_dir,
+        spark, docs, checkpoint_dir=args.checkpoint_dir,
         winner=args.winner,
     )
     n_exact = exact.count()
@@ -301,7 +268,6 @@ def main(argv=None) -> int:
                 "n_after_exact": n_exact,
                 "n_clustered_docs": n_clustered,
                 "n_output": n_out,
-                "algorithm": args.algorithm,
                 "wall_sec": round(time.time() - t0, 3),
             }
         )

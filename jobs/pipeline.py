@@ -45,7 +45,7 @@ Usage:
         --input <pages.parquet | warehouse dir> --output <dir> \
         [--partitions 32] [--salt 8] [--resume] \
         [--min-quality 0.3] [--langs en,de,fr,es,zh] [--min-tokens 5] \
-        [--algorithm twophase] [--checkpoint-dir <dir>]
+        [--checkpoint-dir <dir>]
 
 Scale notes (100 TB framing): stage boundaries are parquet writes, so
 a failure resumes from the last completed stage (stages 2-4 are cheap
@@ -91,7 +91,6 @@ def run_pipeline(
     min_quality: float = 0.3,
     langs: list[str] | None = None,
     min_tokens: int = 5,
-    algorithm: str = "twophase",
     checkpoint_dir: str | None = None,
     benchmark_path: str | None = None,
     blocked_hosts: list[str] | None = None,
@@ -153,9 +152,7 @@ def run_pipeline(
         F.col("extracted_text").alias("text"),
         "lang", "quality", "n_tokens",
     )
-    _exact, clusters, corpus = build_dedup(
-        spark, docs, algorithm=algorithm, checkpoint_dir=checkpoint_dir
-    )
+    _exact, clusters, corpus = build_dedup(spark, docs, checkpoint_dir=checkpoint_dir)
     corpus_path = os.path.join(output_dir, "corpus")
     corpus.write.mode("overwrite").parquet(corpus_path)
     clusters.write.mode("overwrite").parquet(os.path.join(output_dir, "clusters"))
@@ -298,7 +295,7 @@ def run_pipeline(
         splits=split_counts,
         params=dict(
             min_quality=min_quality, langs=langs, min_tokens=min_tokens,
-            algorithm=algorithm, partitions=n_partitions, salt=salt,
+            partitions=n_partitions, salt=salt,
             benchmark=benchmark_path,
             n_blocked_hosts=len(blocked_hosts) if blocked_hosts else 0,
         ),
@@ -319,8 +316,6 @@ def main(argv=None) -> int:
     ap.add_argument("--min-quality", type=float, default=0.3)
     ap.add_argument("--langs", default="en,de,fr,es,zh")
     ap.add_argument("--min-tokens", type=int, default=5)
-    ap.add_argument("--algorithm", default="twophase",
-                    choices=["propagation", "twophase"])
     ap.add_argument("--checkpoint-dir", default=None)
     ap.add_argument("--benchmark", default=None,
                     help="parquet of eval-set texts (column `text`); corpus docs "
@@ -356,7 +351,6 @@ def main(argv=None) -> int:
         min_quality=args.min_quality,
         langs=[s for s in args.langs.split(",") if s],
         min_tokens=args.min_tokens,
-        algorithm=args.algorithm,
         checkpoint_dir=args.checkpoint_dir,
         benchmark_path=args.benchmark,
         blocked_hosts=parse_blocklist(args.blocklist),

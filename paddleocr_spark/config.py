@@ -83,15 +83,6 @@ class PipelineConfig:
     # sections ("pages") of a document; 0 = no limit.
     page_num: int = 0
 
-    # Aspect-ratio batch sort analog (predict_rec.py:456-460,
-    # predict_cls.py:83-86): order rows by html length WITHIN each
-    # partition before the stage-1 Arrow UDF so Arrow batches hold
-    # similar-sized documents (evens out per-batch parse cost the way
-    # the reference's width-sorted batches cut padding waste). Pure
-    # performance: no shuffle, and output identity is carried by the
-    # url column so results are unaffected.
-    sort_by_len: bool = False
-
     # Region scoring mode (db_postprocess.py:189-225): 'fast' scores
     # over the block's full subtree text (box_score_fast: bbox-mask
     # mean, includes nested elements), 'slow' over the element's OWN

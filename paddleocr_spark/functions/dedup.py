@@ -23,7 +23,7 @@ DuckDB oracle reproduces them bitwise.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from paddleocr_spark.functions.textstats import sql_shingles
@@ -107,17 +107,6 @@ def _spread(df: DataFrame, *cols: str) -> DataFrame:
     if est is not None and est < sc.defaultParallelism:
         return df.repartition(sc.defaultParallelism, *cols)
     return df
-
-
-def minhash_from_shingles(sh: Column, seed: int) -> Column:
-    """One MinHash value: min over word-k-shingles of md5('{seed}|'+s).
-
-    md5 hex strings compare lexicographically the same in every engine,
-    so `min` needs no int conversion.
-    """
-    return F.array_min(
-        F.transform(sh, lambda s: F.md5(F.concat(F.lit(f"{seed}|"), s)))
-    )
 
 
 def with_minhash(df: DataFrame, text_col: str = "text", n: int = N_MINHASH) -> DataFrame:
@@ -441,6 +430,19 @@ def sql_simhash64_near_dup(
          and a.{id_col} < b.{id_col}
         where {ham} <= {max_hamming}
     """
+
+
+def exact_keepers(df: DataFrame, hash_col: str) -> DataFrame:
+    """THE exact-dedup keeper rule, in one place (the full job, its
+    ``--base`` incremental variant and the signature-store path share
+    it): one row per ``hash_col`` value, the one with the minimum
+    ``doc_id``. One shuffle of the input on the hash key."""
+    w = Window.partitionBy(hash_col).orderBy("doc_id")
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
 
 
 def cc_admitted_new_ids(

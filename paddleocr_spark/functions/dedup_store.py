@@ -16,8 +16,10 @@ and runs the day's dedup against the store:
 - the new batch's hashes and bands are BROADCAST to probe it (the small
   side is the build side — the corpus is never collected, never
   shuffled by key);
-- candidate pairs then flow through the same connected-components +
-  corpus-taint logic as jobs/dedup.py, so admission semantics are
+- the exact-dup keeper (`dedup.exact_keepers`), connected components
+  (`graph.connected_components`, which picks its own algorithm) and the
+  corpus-taint admission rule (`dedup.cc_admitted_new_ids`) are the
+  same functions jobs/dedup.py calls, so admission semantics are
   identical (parity-tested), including new-doc-chained-to-corpus-
   through-another-new-doc.
 
@@ -92,7 +94,6 @@ def incremental_dedup_against_store(
     checkpoint_dir: str | None = None,
     n_minhash: int = N_MINHASH,
     n_bands: int = LSH_BANDS,
-    algorithm: str = "propagation",
 ) -> DataFrame:
     """Admit only new documents that duplicate neither the corpus (via
     the store) nor an admitted newcomer. Returns the survivors; the
@@ -102,30 +103,16 @@ def incremental_dedup_against_store(
     scanned exactly twice (hash probe + band probe), both column-pruned,
     and its output is only the matching rows — the day's collision set,
     not the corpus."""
-    from pyspark.sql import Window
+    from paddleocr_spark.functions.graph import connected_components
 
-    from paddleocr_spark.functions.graph import (
-        connected_components,
-        connected_components_two_phase,
-    )
-
-    cc_fn = (
-        connected_components_two_phase
-        if algorithm == "twophase"
-        else connected_components
-    )
     store = read_store(spark, store_dir)
     new_sigs = doc_signatures(
         new, id_col, text_col, n_minhash=n_minhash, n_bands=n_bands
     ).cache()
 
     # 1) exact, within batch: min doc_id per content hash
-    new_hashes = new_sigs.select("doc_id", "content_hash").distinct()
-    w = Window.partitionBy("content_hash").orderBy("doc_id")
-    batch_exact = (
-        new_hashes.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    batch_exact = dedup.exact_keepers(
+        new_sigs.select("doc_id", "content_hash").distinct(), "content_hash"
     )
     # 2) exact, vs corpus: stream the store once against the broadcast
     #    batch hashes; the (small) matched set then anti-joins the batch.
@@ -169,7 +156,7 @@ def incremental_dedup_against_store(
     # 4) CC + corpus taint, same admission rule as jobs/dedup.py:
     #    a new doc survives iff its component is corpus-free and it is
     #    the component minimum (or it collided with nothing)
-    cc = cc_fn(pairs, checkpoint_dir=checkpoint_dir)
+    cc = connected_components(pairs, checkpoint_dir=checkpoint_dir)
     # the base side here is the day's COLLISION set (store rows that
     # matched some newcomer), bounded by the batch — broadcastable
     clustered_survivors = dedup.cc_admitted_new_ids(

@@ -7,14 +7,16 @@ pairs) operates per-document on <=10^3 boxes; the corpus-scale analog is
 connected components over near-duplicate candidate pairs, where the
 edge list itself is distributed.
 
-Implementation: min-label propagation — every node repeatedly takes the
-minimum label among itself and its neighbors until a fixpoint. Each
-iteration is one join + one groupBy (two shuffles over (id, label)
-pairs only, never document bodies). Convergence is O(graph diameter)
-iterations; near-dup clusters are dense and shallow (diameter ~2-3), so
-this settles in a handful of rounds. If the loop exhausts ``max_iter``
-without reaching the fixpoint (adversarially long chains), it does NOT
-return the non-converged labels silently — it falls back to
+Production code calls one entry point, `connected_components`, and it
+picks its algorithm from what it observes — no caller chooses. It runs
+min-label propagation: every node repeatedly takes the minimum label
+among itself and its neighbors until a fixpoint. Each iteration is one
+join + one groupBy (two shuffles over (id, label) pairs only, never
+document bodies). Convergence is O(graph diameter) iterations; near-dup
+clusters are dense and shallow (diameter ~2-3), so this settles in a
+handful of rounds. If the loop exhausts ``max_iter`` without reaching
+the fixpoint (adversarially long chains), it never returns the
+non-converged labels: it warns and falls back to
 `connected_components_two_phase`, the large-star/small-star algorithm
 (Kiveris et al.) that contracts chains in O(log n) rounds; tests assert
 both give identical labels.
@@ -52,17 +54,15 @@ def connected_components(
     id_b: str = "id_b",
     max_iter: int = 25,
     checkpoint_dir: str | None = None,
-    on_nonconverged: str = "fallback",
 ) -> DataFrame:
     """(id_a, id_b) undirected edges -> (id, cluster_id) with
     cluster_id = min node id in the component. Deterministic: pure
     integer min-fixpoint, independent of partitioning.
 
-    ``on_nonconverged``: what to do if ``max_iter`` rounds pass without
-    the changed==0 fixpoint — "fallback" (default) reruns with the
-    O(log n) two-phase algorithm, "raise" raises RuntimeError,
-    "warn" returns the possibly-wrong labels with a warning (only for
-    diagnostics; never silent).
+    The connected-components entry point every production caller uses.
+    If ``max_iter`` propagation rounds pass without the changed==0
+    fixpoint, it warns and reruns with the O(log n) two-phase
+    algorithm, so the labels returned are always the converged ones.
     """
     ckpt = _make_checkpointer(pairs, checkpoint_dir)
     edges = (
@@ -78,7 +78,6 @@ def connected_components(
         .withColumn("label", F.col("id"))
     )
 
-    converged = False
     for _ in range(max_iter):
         # each node's new label: min(own, min over neighbors' labels)
         nbr = (
@@ -101,22 +100,17 @@ def connected_components(
         )
         labels = new_labels
         if changed == 0:
-            converged = True
             break
-
-    if not converged:
-        msg = (
+    else:
+        warnings.warn(
             f"connected_components did not converge in {max_iter} rounds "
-            "(component diameter exceeds max_iter)"
+            "(component diameter exceeds max_iter); falling back to "
+            "two-phase CC",
+            RuntimeWarning,
         )
-        if on_nonconverged == "raise":
-            raise RuntimeError(msg)
-        if on_nonconverged == "fallback":
-            warnings.warn(msg + "; falling back to two-phase CC", RuntimeWarning)
-            return connected_components_two_phase(
-                pairs, id_a, id_b, checkpoint_dir=checkpoint_dir
-            )
-        warnings.warn(msg + "; returning NON-CONVERGED labels", RuntimeWarning)
+        return connected_components_two_phase(
+            pairs, id_a, id_b, checkpoint_dir=checkpoint_dir
+        )
 
     return labels.select("id", F.col("label").alias("cluster_id"))
 

@@ -65,15 +65,7 @@ def make_detect_blocks_udf(cfg: PipelineConfig = DEFAULT):
 def with_blocks(df, cfg: PipelineConfig = DEFAULT, html_col: str = "html"):
     """Append the ``blocks`` array column and DROP the raw html so no
     stage after this one carries page bytes (column-pruning discipline,
-    SURVEY.md §4: 'don't read html when only counting').
-
-    cfg.sort_by_len: aspect-ratio batch sort analog — a no-shuffle
-    sortWithinPartitions on byte length ahead of the UDF groups
-    similar-sized pages into the same Arrow batch (predict_rec.py:
-    456-460); row identity rides the url column, so downstream results
-    are unchanged (asserted by test_sort_by_len_output_identical)."""
-    if cfg.sort_by_len:
-        df = df.sortWithinPartitions(F.length(F.col(html_col)))
+    SURVEY.md §4: 'don't read html when only counting')."""
     udf = make_detect_blocks_udf(cfg)
     return df.withColumn("blocks", udf(F.col(html_col))).drop(html_col)
 

@@ -265,7 +265,4 @@ def extract_fused(df: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame:
                 }
             )
 
-    cols = df.select("url", "html", "lang")
-    if cfg.sort_by_len:
-        cols = cols.sortWithinPartitions(F.length("html"))
-    return cols.mapInPandas(run, FUSED_SCHEMA)
+    return df.select("url", "html", "lang").mapInPandas(run, FUSED_SCHEMA)

@@ -2123,45 +2123,48 @@ def q_host_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_hits(iters: int = 4) -> str:
+    # every CTE is MATERIALIZED: DuckDB inlines a plain CTE at each
+    # reference, and round i references round i-1 several times, so
+    # the inlined plan grows exponentially with the round count
     ctes = [
-        f"edges as ({SQL_HOST_LINK_GRAPH.strip()})",
-        "e0 as (select src_host src, dst_host dst, cast(n_links as double) w from edges)",
-        "nodes as (select src node from e0 union select dst from e0)",
-        "h0 as (select node, 1.0 v from nodes)",
+        f"edges as materialized ({SQL_HOST_LINK_GRAPH.strip()})",
+        "e0 as materialized (select src_host src, dst_host dst, cast(n_links as double) w from edges)",
+        "nodes as materialized (select src node from e0 union select dst from e0)",
+        "h0 as materialized (select node, 1.0 v from nodes)",
     ]
     for i in range(1, iters + 1):
         p = i - 1
         ctes.append(
-            f"ar{i} as (select e.dst node,"
+            f"ar{i} as materialized (select e.dst node,"
             " list_reduce(list(e.w * h.v order by e.src), (x,y) -> x + y) v"
             f" from e0 e join h{p} h on h.node = e.src group by e.dst)"
         )
         ctes.append(
-            f"an{i} as (select n.node, coalesce(r.v, 0.0) v"
+            f"an{i} as materialized (select n.node, coalesce(r.v, 0.0) v"
             f" from nodes n left join ar{i} r on n.node = r.node)"
         )
         ctes.append(
-            f"at{i} as (select list_reduce(list(v order by node), (x,y) -> x + y) t"
+            f"at{i} as materialized (select list_reduce(list(v order by node), (x,y) -> x + y) t"
             f" from an{i})"
         )
         ctes.append(
-            f"a{i} as (select node, v / t v from an{i} cross join at{i})"
+            f"a{i} as materialized (select node, v / t v from an{i} cross join at{i})"
         )
         ctes.append(
-            f"hr{i} as (select e.src node,"
+            f"hr{i} as materialized (select e.src node,"
             " list_reduce(list(e.w * a.v order by e.dst), (x,y) -> x + y) v"
             f" from e0 e join a{i} a on a.node = e.dst group by e.src)"
         )
         ctes.append(
-            f"hn{i} as (select n.node, coalesce(r.v, 0.0) v"
+            f"hn{i} as materialized (select n.node, coalesce(r.v, 0.0) v"
             f" from nodes n left join hr{i} r on n.node = r.node)"
         )
         ctes.append(
-            f"ht{i} as (select list_reduce(list(v order by node), (x,y) -> x + y) t"
+            f"ht{i} as materialized (select list_reduce(list(v order by node), (x,y) -> x + y) t"
             f" from hn{i})"
         )
         ctes.append(
-            f"h{i} as (select node, v / t v from hn{i} cross join ht{i})"
+            f"h{i} as materialized (select node, v / t v from hn{i} cross join ht{i})"
         )
     return (
         "with " + ",\n".join(ctes) + f"""
@@ -2541,31 +2544,33 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_bpe_ctes(rounds: int = BPE_ROUNDS) -> list:
+    # MATERIALIZED for the same reason as `_sql_hits`: w{i} reads w{p}
+    # and m{i} (twice), so inlined rounds blow the plan up exponentially
     ctes = [
-        "w0 as (select trim(regexp_replace(w, '(.)', '\\1 ', 'g')) sym,"
+        "w0 as materialized (select trim(regexp_replace(w, '(.)', '\\1 ', 'g')) sym,"
         " count(*) cnt from (select unnest(str_split(text, ' ')) w"
         " from documents) where w <> '' group by 1)"
     ]
     for i in range(1, rounds + 1):
         p = i - 1
         ctes.append(
-            f"t{i} as (select str_split(sym, ' ') ts, cnt from w{p}"
+            f"t{i} as materialized (select str_split(sym, ' ') ts, cnt from w{p}"
             " where len(str_split(sym, ' ')) >= 2)"
         )
         ctes.append(
-            f"x{i} as (select ts[j] lft, ts[j+1] rgt, cnt from t{i},"
+            f"x{i} as materialized (select ts[j] lft, ts[j+1] rgt, cnt from t{i},"
             f" unnest(range(1, len(ts))) r(j))"
         )
         ctes.append(
-            f"p{i} as (select lft, rgt, cast(sum(cnt) as bigint)"
+            f"p{i} as materialized (select lft, rgt, cast(sum(cnt) as bigint)"
             f" pair_count from x{i} group by 1, 2)"
         )
         ctes.append(
-            f"m{i} as (select lft, rgt, lft || rgt merged, pair_count"
+            f"m{i} as materialized (select lft, rgt, lft || rgt merged, pair_count"
             f" from p{i} order by pair_count desc, lft, rgt limit 1)"
         )
         ctes.append(
-            f"w{i} as (select trim(regexp_replace(replace("
+            f"w{i} as materialized (select trim(regexp_replace(replace("
             "' ' || replace(sym, ' ', '  ') || ' ',"
             f" (select ' ' || lft || '  ' || rgt || ' ' from m{i}),"
             f" (select ' ' || lft || rgt || ' ' from m{i})),"

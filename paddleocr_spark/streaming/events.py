@@ -19,7 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     DoubleType,
     LongType,
     StringType,
@@ -30,6 +29,7 @@ from pyspark.sql.types import (
 
 from paddleocr_spark.config import DEFAULT, PipelineConfig
 from paddleocr_spark.operators.extract import extract_fused
+from paddleocr_spark.sources.readers import PAGES_SCHEMA
 
 EVENTS_SCHEMA = StructType(
     [
@@ -39,16 +39,6 @@ EVENTS_SCHEMA = StructType(
         StructField("event_type", StringType()),
         StructField("value", DoubleType()),
         StructField("props", StringType()),
-    ]
-)
-
-PAGES_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("warc_ts", TimestampType()),
-        StructField("html", BinaryType()),
-        StructField("text", StringType()),
-        StructField("lang", StringType()),
     ]
 )
 

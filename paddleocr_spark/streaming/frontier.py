@@ -35,7 +35,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from paddleocr_spark.streaming.events import PAGES_SCHEMA
+from paddleocr_spark.sources.readers import PAGES_SCHEMA
 
 _KEY = ["host", "path"]
 

@@ -21,7 +21,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from paddleocr_spark.sources import warehouse as W
-from paddleocr_spark.streaming.events import PAGES_SCHEMA, await_drain
+from paddleocr_spark.sources.readers import PAGES_SCHEMA
+from paddleocr_spark.streaming.events import await_drain
 
 
 def committed_batch_ids(table_dir: str) -> set[int]:

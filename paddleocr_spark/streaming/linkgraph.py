@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from paddleocr_spark.streaming.events import PAGES_SCHEMA
+from paddleocr_spark.sources.readers import PAGES_SCHEMA
 
 
 def host_edges(pages: DataFrame) -> DataFrame:

@@ -1,5 +1,5 @@
 """jobs/dedup.py end-to-end: exact dups dropped, near-dup clusters
-resolved to one representative, both algorithms agree."""
+resolved to one representative."""
 
 from __future__ import annotations
 
@@ -11,11 +11,10 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _run_job(out_dir, algorithm):
+def _run_job(out_dir, input_path="/root/testdata/sf0.001/documents.parquet"):
     cmd = [
         sys.executable, os.path.join(REPO, "jobs", "dedup.py"),
-        "--input", "/root/testdata/sf0.001/documents.parquet",
-        "--output", out_dir, "--algorithm", algorithm,
+        "--input", input_path, "--output", out_dir,
     ]
     env = dict(os.environ, PYTHONPATH=REPO)
     proc = subprocess.run(cmd, capture_output=True, text=True, env=env, check=True)
@@ -25,7 +24,7 @@ def _run_job(out_dir, algorithm):
 
 def test_dedup_job_end_to_end(spark, tmp_path):
     out = str(tmp_path / "dedup_out")
-    stats = _run_job(out, "propagation")
+    stats = _run_job(out)
     assert stats["n_input"] >= stats["n_after_exact"] >= stats["n_output"] > 0
     # every clustered loser is absent, every winner present exactly once
     corpus = spark.read.parquet(os.path.join(out, "corpus"))
@@ -41,32 +40,6 @@ def test_dedup_job_end_to_end(spark, tmp_path):
     assert stats["n_clustered_docs"] > 0
 
 
-def test_dedup_job_twophase_identical(spark, tmp_path):
-    out_a = str(tmp_path / "a")
-    out_b = str(tmp_path / "b")
-    sa = _run_job(out_a, "propagation")
-    sb = _run_job(out_b, "twophase")
-    assert sa["n_output"] == sb["n_output"]
-    ca = sorted(
-        tuple(r) for r in spark.read.parquet(os.path.join(out_a, "clusters")).collect()
-    )
-    cb = sorted(
-        tuple(r) for r in spark.read.parquet(os.path.join(out_b, "clusters")).collect()
-    )
-    assert ca == cb
-
-
-def _run_job_input(out_dir, algorithm, input_path):
-    cmd = [
-        sys.executable, os.path.join(REPO, "jobs", "dedup.py"),
-        "--input", input_path, "--output", out_dir, "--algorithm", algorithm,
-    ]
-    env = dict(os.environ, PYTHONPATH=REPO)
-    proc = subprocess.run(cmd, capture_output=True, text=True, env=env, check=True)
-    line = [l for l in proc.stdout.splitlines() if l.startswith("{")][-1]
-    return json.loads(line)
-
-
 def test_dedup_job_empty_input(spark, tmp_path):
     """Zero-row input: the job completes with empty outputs, no crash
     (the CC loop and LSH banding must tolerate empty frames)."""
@@ -74,7 +47,7 @@ def test_dedup_job_empty_input(spark, tmp_path):
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(0) \
         .write.parquet(src)
     out = str(tmp_path / "out")
-    stats = _run_job_input(out, "propagation", src)
+    stats = _run_job(out, src)
     assert stats["n_input"] == 0 and stats["n_output"] == 0
 
 

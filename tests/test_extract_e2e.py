@@ -39,17 +39,6 @@ def test_fused_mode_byte_identical(pages, golden):
     _assert_full_match(extract_fused(pages), golden)
 
 
-def test_fused_mode_sorted_batches_identical(pages, golden):
-    """sort_by_len regroups Arrow batches; output must not change."""
-    from dataclasses import replace
-
-    from paddleocr_spark.config import DEFAULT
-
-    _assert_full_match(
-        extract_fused(pages, replace(DEFAULT, sort_by_len=True)), golden
-    )
-
-
 def test_partitioning_invariance(pages, golden):
     """Byte-identity must hold regardless of physical partitioning
     (SURVEY.md §7 hard parts: no partition-order dependence)."""

@@ -80,8 +80,8 @@ def test_two_phase_bridged_cliques(spark):
 
 def test_cc_nonconverged_falls_back_to_two_phase(spark, recwarn):
     """A chain whose diameter exceeds max_iter must NOT return wrong
-    labels silently: default behavior falls back to the two-phase
-    algorithm and still yields correct components (with a warning)."""
+    labels silently: it falls back to the two-phase algorithm and
+    still yields correct components (with a warning)."""
     import warnings
 
     pairs = [(i, i + 1) for i in range(1, 12)]  # chain 1..12, diameter 11
@@ -92,15 +92,6 @@ def test_cc_nonconverged_falls_back_to_two_phase(spark, recwarn):
         got = {r["id"]: r["cluster_id"] for r in out.collect()}
     assert got == {i: 1 for i in range(1, 13)}
     assert any("did not converge" in str(x.message) for x in w)
-
-
-def test_cc_nonconverged_raise_mode(spark):
-    import pytest
-
-    pairs = [(i, i + 1) for i in range(1, 12)]
-    df = spark.createDataFrame(pairs, "id_a bigint, id_b bigint")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, max_iter=2, on_nonconverged="raise")
 
 
 def test_cc_reliable_checkpoint_dir(spark, tmp_path):

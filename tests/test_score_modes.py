@@ -1,9 +1,7 @@
 """score_mode='slow' (box_score_slow analog, db_postprocess.py:206-225)
-and the aspect-ratio batch-sort flag (predict_rec.py:456-460 analog)."""
+and the unclip pad."""
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import functions as F
 
@@ -58,21 +56,6 @@ def test_slow_mode_spark_matches_oracle(spark):
         ):
             got = {r["url"]: r["extracted_text"] for r in out.collect()}
             assert got == want, (name, cfg.score_mode)
-
-
-def test_sort_by_len_output_identical(spark, smoke_dir):
-    """The batch-sort flag is perf-only: byte-identical extraction."""
-    pages = spark.read.parquet(os.path.join(smoke_dir, "pages.parquet"))
-    base = {
-        r["url"]: (r["extracted_text"], r["n_blocks_kept"])
-        for r in extract(pages.select("url", "lang", "html")).collect()
-    }
-    sorted_cfg = PipelineConfig(sort_by_len=True)
-    got = {
-        r["url"]: (r["extracted_text"], r["n_blocks_kept"])
-        for r in extract(pages.select("url", "lang", "html"), sorted_cfg).collect()
-    }
-    assert got == base and len(base) > 0
 
 
 def test_unclip_pad_widens_spans_only(spark):
