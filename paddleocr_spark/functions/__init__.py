@@ -5,9 +5,9 @@ large-scale training-data operators a 100 TB corpus pipeline needs:
 deduplication (exact / MinHash-LSH / SimHash / n-gram Jaccard),
 similarity search (brute-force + LSH-bucketed ANN), text analysis
 (language-ID, quality scoring, token counting, fingerprinting), and
-multimodal column plumbing (binary payload + typed metadata).
+multimodal metadata (binary payload -> typed header fields).
 
 Everything here is native `pyspark.sql.functions` expressions (JVM-side,
-whole-stage codegen) except the clearly-marked multimodal decode stub,
-which is Arrow-batched `mapInPandas` plumbing.
+whole-stage codegen) except the multimodal header decoders, which run in
+Arrow-batched `mapInPandas`.
 """

@@ -21,10 +21,11 @@ function of the byte count, so the DuckDB oracle can reproduce it):
 - channels  = 3
 - format    = 'png' if n_bytes % 2 == 0 else 'jpeg'
 
-A real deployment extends the same batch loop with pixel-level codecs
-(PIL/ffmpeg); the Spark-side contract — schema, Arrow batch shape,
-partitioning neutrality, column pruning (payload dropped after feature
-extraction) — stands unchanged.
+Audio/video containers (`extract_av_meta`) get the same treatment from
+their own headers. Both entry points back registry queries
+(`multimodal_meta`, `media_meta_av`). Pixel-level work (resize, frame
+sampling, encoders) is not mirrored: no job or query consumes pixels,
+and without codec libraries it could only be a stub.
 """
 
 from __future__ import annotations
@@ -33,11 +34,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    FloatType,
     IntegerType,
     LongType,
     StringType,
@@ -372,82 +369,3 @@ def extract_media_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame
             yield out
 
     return df.select("doc_id", payload_col).mapInPandas(batches, MEDIA_META_SCHEMA)
-
-
-def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling plumbing: explode a fake frame index array
-    (0, every_n, 2*every_n, ...) bounded by n_bytes/1024 'frames'.
-    Demonstrates the explode/fan-out shape real frame extraction uses."""
-    n_frames = (F.octet_length("payload") / F.lit(1024)).cast("int")
-    idx = F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0)), F.lit(every_n))
-    return df.select("doc_id", F.explode(idx).alias("frame_no"))
-
-
-RESIZE_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("thumb", BinaryType()),
-    ]
-)
-
-
-def resize_media(df: DataFrame, max_side: int = 128, payload_col: str = "payload") -> DataFrame:
-    """Resize plumbing (DetResizeForTest analog, operators.py:206-333:
-    rescale + record dims): emits the clamped target dims plus a
-    deterministic 'thumbnail' (payload prefix — stands in for the
-    re-encoded bytes a real resizer returns). Binary-in/binary-out
-    mapInPandas contract; the full payload never leaves this stage."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            meta = _decode_batch(pdf[payload_col])  # real dims when parseable
-            w, h = meta["width"], meta["height"]
-            scale = pd.concat([w, h], axis=1).max(axis=1).clip(lower=1)
-            ratio = (max_side / scale).clip(upper=1.0)
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": (w * ratio).astype("int32").clip(lower=1),
-                    "height": (h * ratio).astype("int32").clip(lower=1),
-                    "thumb": pdf[payload_col].map(
-                        lambda b: b"" if b is None else bytes(b)[:64]
-                    ),
-                }
-            )
-            yield out
-
-    return df.select("doc_id", payload_col).mapInPandas(batches, RESIZE_SCHEMA)
-
-
-def media_embedding(df: DataFrame, dim: int = 16, payload_col: str = "payload") -> DataFrame:
-    """Feature-extract plumbing: payload -> fixed-dim float vector (the
-    image-encoder stub) feeding the similarity/ANN operators. The fake
-    features are a pure function of the bytes (md5 of the payload,
-    one byte per dimension, scaled to [0,1)) so results are
-    deterministic across partitionings; a real deployment swaps in a
-    model forward pass over the same Arrow batches."""
-    import hashlib
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            vecs = pdf[payload_col].map(
-                lambda b: [
-                    d / 256.0
-                    for d in hashlib.md5(
-                        b"" if b is None else bytes(b)
-                    ).digest()[:dim]
-                ]
-            )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "embedding": vecs}
-            )
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("embedding", ArrayType(FloatType())),
-        ]
-    )
-    return df.select("doc_id", payload_col).mapInPandas(batches, schema)

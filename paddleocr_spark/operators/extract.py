@@ -6,8 +6,8 @@ of them agree):
 
 - ``extract_fused`` (the production path): the whole per-page pipeline
   as ONE Arrow-batched mapInPandas stage running the oracle's
-  ``extract_page`` — the job default, and what streaming, the
-  ``Extractor`` facade and the registry's ``extract`` op run.
+  ``extract_page`` — the job default, and what the ``Extractor``
+  facade and the registry's ``extract`` op run.
 
 - ``extract`` (array mode, the Spark-native cross-check): after the
   stage-1 UDF, everything is per-row higher-order functions on the

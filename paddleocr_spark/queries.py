@@ -390,8 +390,7 @@ from events group by event_type
 # ---------------------------------------------------------------------------
 
 def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling event-time window aggregation (the batch twin of the
-    Structured Streaming job in streaming/events.py)."""
+    """Tumbling event-time window aggregation."""
     ev = _t(spark, sf_dir, "events")
     return (
         ev.groupBy(

@@ -432,10 +432,8 @@ def score_against_bigram_lm(
 ) -> DataFrame:
     """Score documents under a TRAINED stupid-backoff bigram LM ->
     (doc_id, mean_nll, n_bigrams). The LM tables arrive as inputs so
-    the batch query, the streaming twin, and a real
-    trained-model-table deployment all share this one plan. ``docs``
-    may be a streaming frame: every join here is stream-static and a
-    document's bigrams never leave its micro-batch."""
+    the batch query, the pipeline's LM gate and a real
+    trained-model-table deployment all share this one plan."""
     u1 = uni.select(F.col("hw").alias("h1"), F.col("c").alias("c1"))
     u2 = uni.select(F.col("hw").alias("h2"), F.col("c").alias("c2"))
     prob = (
@@ -485,9 +483,7 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables join back to the scoring stream (vocab-sized — AQE
     broadcasts at test SF, shuffle-joins at corpus scale), T by a
     1-row broadcast cross join, one final doc_id aggregation. No UDFs,
-    no driver actions; gram text never shuffles. Streaming twin:
-    `streaming/lm_gate.py` scores a document stream against the same
-    tables (parity-tested).
+    no driver actions; gram text never shuffles.
     """
     d = _t(spark, sf_dir, "documents")
     uni, bi, total = bigram_lm_tables(d.filter(F.col("doc_id") % 2 == 0))

@@ -1156,8 +1156,7 @@ _queries.ORACLES["embed_near_dup_banded"] = SQL_EMBED_NEAR_DUP_BANDED
 
 
 # ---------------------------------------------------------------------------
-# Native session_window (the built-in session operator, batch mode) —
-# upgrades streaming/sessions.py's operator from test-only to
+# Native session_window (the built-in session operator, batch mode),
 # oracle-checked. Spark session semantics: a session's window is
 # [first, last + gap); an event exactly `gap` after the previous one
 # starts a NEW session (diff >= gap), unlike the lag formulation in
@@ -1167,9 +1166,7 @@ _queries.ORACLES["embed_near_dup_banded"] = SQL_EMBED_NEAR_DUP_BANDED
 
 def q_events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user sessions via F.session_window (30-min inactivity gap):
-    n_sessions, n_events and the busiest session's event count. The
-    same aggregate runs under readStream with a watermark
-    (streaming/sessions.py:session_window_stream)."""
+    n_sessions, n_events and the busiest session's event count."""
     ev = _t(spark, sf_dir, "events").select(
         "user_id", F.col("ts").cast("timestamp").alias("tss")
     )

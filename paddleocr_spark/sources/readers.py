@@ -119,8 +119,8 @@ def latest_crawl(df: DataFrame) -> DataFrame:
     """Recrawl dedup: keep exactly one row per url — the latest
     `warc_ts`, ties broken by the longer (then lexicographically
     larger) html payload so the choice is deterministic under any
-    partitioning. One shuffle on url; the streaming twin is
-    streaming/dedup.py with first-seen semantics."""
+    partitioning. One shuffle on url; the recrawl ingest
+    (streaming/ingest.py) applies it to each micro-batch."""
     from pyspark.sql import Window
 
     # the trailing whole-row key makes the order TOTAL: rows equal in

@@ -176,8 +176,8 @@ def _binary_files(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _parse_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas parser (path, content) -> PAGES_SCHEMA rows; shared
-    by the batch reader and the streaming ingest (streaming/ingest.py)."""
+    """mapInPandas parser (path, content) -> PAGES_SCHEMA rows for the
+    batch reader."""
     for pdf in batches:
         for _, row in pdf.iterrows():
             recs = [

@@ -12,8 +12,8 @@ and crawled in batch j > i leaves the frontier at j (the fetch loop
 consuming its own discoveries). `first_seen_batch` records when each
 frontier url was first referenced.
 
-Link semantics match streaming/linkgraph.py: absolute hrefs resolve to
-their own (host, path); relative hrefs resolve to the PAGE's host.
+Link semantics: absolute hrefs resolve to their own (host, path);
+relative hrefs resolve to the PAGE's host.
 
 Scale notes: the stores are consulted via left-anti joins, and a
 left-anti join BUILDS on the store side — so per-batch cost is

@@ -14,14 +14,12 @@ def test_multimodal_null_payload_rows_survive(spark):
     from paddleocr_spark.functions.multimodal import (
         extract_av_meta,
         extract_media_meta,
-        media_embedding,
-        resize_media,
     )
 
     df = spark.createDataFrame(
         [(1, b"not an image"), (2, None)], "doc_id bigint, payload binary"
     )
-    for fn in (extract_media_meta, extract_av_meta, resize_media, media_embedding):
+    for fn in (extract_media_meta, extract_av_meta):
         assert fn(df).count() == 2, fn.__name__
 
 

@@ -121,18 +121,6 @@ def test_det_metric_known_values(spark):
     assert abs(r["precision"] - 1 / 3) < 1e-12 and abs(r["recall"] - 0.5) < 1e-12
 
 
-def test_frame_sample_plan(spark):
-    from paddleocr_spark.functions.multimodal import frame_sample_plan
-
-    df = spark.createDataFrame(
-        [(1, b"x" * 4096), (2, b"y" * 100)], "doc_id long, payload binary"
-    )
-    rows = frame_sample_plan(df, every_n=2).collect()
-    got = sorted((r["doc_id"], r["frame_no"]) for r in rows)
-    # doc 1: 4 frames -> indices 0,2; doc 2: 0 frames -> clamped single 0
-    assert got == [(1, 0), (1, 2), (2, 0)]
-
-
 def test_labels_tsv_source_drops_malformed(spark, tmp_path):
     """SimpleDataSet analog: tab-separated (url, label), bad lines
     skipped not fatal."""
@@ -152,44 +140,6 @@ def test_labels_tsv_source_drops_malformed(spark, tmp_path):
         ("http://a/2", "boilerplate"),
         ("http://a/3", "content"),
     }
-
-
-def test_resize_media_contract(spark):
-    """Resize plumbing: dims clamped to max_side, thumb is a payload
-    prefix, payload column not in output (pruning discipline)."""
-    from paddleocr_spark.functions.multimodal import resize_media
-
-    df = spark.createDataFrame(
-        [(1, b"x" * 1000), (2, b"y" * 10)], "doc_id long, payload binary"
-    )
-    out = resize_media(df, max_side=128)
-    assert out.columns == ["doc_id", "width", "height", "thumb"]
-    rows = {r["doc_id"]: r for r in out.collect()}
-    for r in rows.values():
-        assert 1 <= r["width"] <= 128 and 1 <= r["height"] <= 128
-    assert bytes(rows[1]["thumb"]) == b"x" * 64
-    assert bytes(rows[2]["thumb"]) == b"y" * 10
-
-
-def test_media_embedding_deterministic_and_feeds_ann(spark):
-    """Feature-extract stub: same bytes -> same vector regardless of
-    partitioning, and the output composes with the similarity ops."""
-    from paddleocr_spark.functions.multimodal import media_embedding
-    from paddleocr_spark.functions.similarity import topk_cosine
-
-    data = [(i, bytes([i % 7] * (50 + i))) for i in range(40)]
-    df1 = spark.createDataFrame(data, "doc_id long, payload binary").repartition(1)
-    df7 = spark.createDataFrame(data, "doc_id long, payload binary").repartition(7)
-    e1 = {r["doc_id"]: r["embedding"] for r in media_embedding(df1).collect()}
-    e7 = {r["doc_id"]: r["embedding"] for r in media_embedding(df7).collect()}
-    assert e1 == e7 and len(e1) == 40
-    assert all(len(v) == 16 for v in e1.values())
-
-    emb = media_embedding(df1).withColumnRenamed("doc_id", "vec_id")
-    q = emb.filter(emb.vec_id == 0)
-    top = topk_cosine(emb, q, k=3)
-    got = [r["vec_id"] for r in top.collect()]
-    assert len(got) == 3 and got[0] == 0  # self is the best match
 
 
 def test_latest_crawl_keeps_newest_per_url(spark):
@@ -344,18 +294,6 @@ def test_extract_media_meta_mixed_real_and_stub(spark):
     n = 18
     assert (got[4]["width"], got[4]["height"]) == (64 + n % 512, 64 + n * 7 % 512)
     assert all(got[i]["channels"] == 3 for i in rows and got)
-
-
-def test_resize_media_uses_real_dims(spark):
-    """resize_media now scales from parsed header dims: a 1000x200 PNG
-    at max_side=100 resizes to 100x20."""
-    from paddleocr_spark.functions.multimodal import resize_media
-
-    df = spark.createDataFrame(
-        [(1, _png_bytes(1000, 200))], "doc_id long, payload binary"
-    )
-    r = resize_media(df, max_side=100).collect()[0]
-    assert (r["width"], r["height"]) == (100, 20)
 
 
 def _wav_bytes(ch=2, rate=44100, junk_first=False, data=b"abc"):

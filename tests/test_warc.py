@@ -175,53 +175,6 @@ def test_extract_job_from_warc_gz_matches_golden(spark, smoke_dir, warc_gz_dir, 
     assert stats["rows_out"] == n and n == ok
 
 
-def test_streaming_warc_ingest_exactly_once(spark, pages_pq, tmp_path):
-    """Streaming crawl front door: WARC members land in a dir, the
-    binaryFile stream drains them into warehouse snapshots via the
-    shared Arrow parser; restart with no new member commits nothing;
-    a new member lands in exactly one new snapshot, and the table's
-    html bytes match the original pages."""
-    from paddleocr_spark.sources import warehouse as WH
-    from paddleocr_spark.streaming.ingest import ingest_warc_stream
-
-    land = str(tmp_path / "landing")
-    tbl = str(tmp_path / "tbl")
-    ckpt = str(tmp_path / "ck")
-    pages = spark.read.parquet(pages_pq)
-    first = pages.limit(200)
-    W.write_warc(first, land, n_files=3, compress=True)
-
-    ingest_warc_stream(spark, land, tbl, ckpt, max_files_per_trigger=1)
-    got = WH.read_table(spark, tbl)
-    assert got.count() == first.count()
-    snaps1 = len(WH.snapshots(tbl))
-    assert snaps1 >= 3  # one snapshot per micro-batch (1 member each)
-
-    # restart, no new member: nothing recommitted
-    ingest_warc_stream(spark, land, tbl, ckpt, max_files_per_trigger=1)
-    assert WH.read_table(spark, tbl).count() == first.count()
-    assert len(WH.snapshots(tbl)) == snaps1
-
-    # lang sniffed off the html bytes matches the source table
-    j = got.alias("g").join(pages.alias("p"), "url")
-    assert j.filter(F.col("g.lang") != F.col("p.lang")).count() == 0
-    assert j.filter(F.col("g.html") != F.col("p.html")).count() == 0
-
-    # one late member -> exactly one new snapshot with its rows
-    late = pages.subtract(first).limit(25)
-    n_late = late.count()
-    import shutil as _sh
-    tmp_member = str(tmp_path / "late_member")
-    W.write_warc(late, tmp_member, n_files=1, compress=True)
-    _sh.copy(
-        os.path.join(tmp_member, "part-00000.warc.gz"),
-        os.path.join(land, "late-00000.warc.gz"),
-    )
-    ingest_warc_stream(spark, land, tbl, ckpt, max_files_per_trigger=1)
-    assert WH.read_table(spark, tbl).count() == first.count() + n_late
-    assert len(WH.snapshots(tbl)) == snaps1 + 1
-
-
 @pytest.mark.parametrize("which", ["plain", "gz"])
 def test_fetch_records_by_cdx_range(spark, pages_pq, warc_dir, warc_gz_dir, which):
     """Selective by-range fetch: only the target urls' ranges are read,
