@@ -240,15 +240,16 @@ def main() -> None:
     timings: dict[str, float] = {}
 
     # Headline: extraction over the CC-shaped pages table at this sf,
-    # through the production plan shape (salted url-hash repartition so
-    # the UDF stage parallelizes regardless of input file layout).
+    # through the production plan shape (url-hash logical parts, one
+    # task per part, so the UDF stage parallelizes regardless of input
+    # file layout): cpus * 2 parts at salt 1 give cpus * 2 tasks.
     from paddleocr_spark.plans.job import add_part_id, salted_repartition
 
     pages_dir = ensure_pages(sf_dir)
     pages = spark.read.parquet(os.path.join(pages_dir, "pages.parquet"))
     n_docs = pages.count()
     n_parts = int(cpus) * 2
-    parted = salted_repartition(add_part_id(pages, n_parts), n_parts, 4)
+    parted = salted_repartition(add_part_id(pages, n_parts), n_parts, 1)
     # Warmup pass (mirrors the reference's 10x warmup before timing,
     # predict_system.py:202-205): spins up the Python worker pool and
     # JIT so the measurement is steady-state throughput, not cold-start.

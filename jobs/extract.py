@@ -5,7 +5,7 @@ Usage:
     spark-submit --master local[N] --driver-memory 8g \
         --py-files dist/paddleocr_spark.zip \
         jobs/extract.py --input <pages.parquet> --output <dir> \
-        [--partitions 64] [--salt 8] [--resume]
+        [--partitions 64] [--salt 1] [--resume]
 
 (local mode hosts all executor threads in the driver JVM — size
 --driver-memory for the thread count; the 1g spark-submit default can
@@ -13,8 +13,9 @@ OOM (SparkExitCode 52) under 8+ threads of dynamic-partition parquet
 writers. On a real cluster use --executor-memory as usual.)
 
 Replaces the reference's subprocess striping
-(tools/infer/predict_system.py:313-324) with salted url-hash
-repartitioning + per-partition lineage (see paddleocr_spark/plans/job.py).
+(tools/infer/predict_system.py:313-324) with url-hash logical parts —
+one task and one output file per part — plus per-partition lineage
+(see paddleocr_spark/plans/job.py).
 """
 
 from __future__ import annotations
@@ -30,7 +31,9 @@ def main(argv=None) -> int:
     ap.add_argument("--input", required=True, help="pages input: parquet path, warehouse dir, or WARC member file/dir (*.warc)")
     ap.add_argument("--output", required=True, help="output directory")
     ap.add_argument("--partitions", type=int, default=32)
-    ap.add_argument("--salt", type=int, default=8)
+    ap.add_argument("--salt", type=int, default=1,
+                    help="tasks (and output files) per logical part; raise it only "
+                         "when the cluster has more task slots than --partitions")
     ap.add_argument("--resume", action="store_true", help="anti-join completed partitions")
     ap.add_argument("--blocklist", default=None,
                     help="host blocklist: a file of hosts (one per line) or a "

@@ -5,7 +5,7 @@ the reference would actually run over a crawl (the corpus-scale analog
 of the reference's predict_system.py main() orchestration, re-expressed
 as one resumable Spark job):
 
-  1. extract   — salted url-hash partitioning, one Arrow UDF pass,
+  1. extract   — url-hash logical parts (one task each), one Arrow UDF pass,
                  per-partition lineage, anti-join resume
                  (plans/job.py:run_extract_job; snapshot-pinned when
                  --input is a warehouse table dir). With --blocklist,
@@ -43,15 +43,16 @@ Usage:
     spark-submit --master local[N] --driver-memory 8g \
         --py-files dist/paddleocr_spark.zip jobs/pipeline.py \
         --input <pages.parquet | warehouse dir> --output <dir> \
-        [--partitions 32] [--salt 8] [--resume] \
+        [--partitions 32] [--salt 1] [--resume] \
         [--min-quality 0.3] [--langs en,de,fr,es,zh] [--min-tokens 5] \
         [--checkpoint-dir <dir>]
 
 Scale notes (100 TB framing): stage boundaries are parquet writes, so
 a failure resumes from the last completed stage (stages 2-4 are cheap
 re-runs; stage 1 resumes per-partition via its own lineage). The only
-shuffles in the whole job are the dedup joins/aggs and the final
-split write's partitionBy — extraction and curation are shuffle-free.
+shuffles in the whole job are extraction's one part→task exchange, the
+dedup joins/aggs and the final split write's partitionBy — curation is
+shuffle-free.
 """
 
 from __future__ import annotations
@@ -86,7 +87,7 @@ def run_pipeline(
     input_path: str,
     output_dir: str,
     n_partitions: int = 32,
-    salt: int = 8,
+    salt: int = 1,
     resume: bool = False,
     min_quality: float = 0.3,
     langs: list[str] | None = None,
@@ -311,7 +312,9 @@ def main(argv=None) -> int:
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
     ap.add_argument("--partitions", type=int, default=32)
-    ap.add_argument("--salt", type=int, default=8)
+    ap.add_argument("--salt", type=int, default=1,
+                    help="tasks (and output files) per logical part; raise it only "
+                    "when the cluster has more task slots than --partitions")
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--min-quality", type=float, default=0.3)
     ap.add_argument("--langs", default="en,de,fr,es,zh")

@@ -115,7 +115,9 @@ def main() -> None:
     ap.add_argument("--rows", type=int, default=None,
                     help="override page count (cached under .data/pages)")
     ap.add_argument("--partitions", type=int, default=64)
-    ap.add_argument("--salt", type=int, default=8)
+    ap.add_argument("--salt", type=int, default=1,
+                    help="tasks (and output files) per logical part; raise it only "
+                    "when the cluster has more task slots than --partitions")
     ap.add_argument("--update-baseline", action="store_true")
     ap.add_argument("--repeat", type=int, default=1,
                     help="run the pair K times; report per-leg MIN wall "

@@ -1,4 +1,5 @@
-"""Scale plan: salted url-hash partitioning + per-partition lineage + resume.
+"""Scale plan: url-hash logical parts, one task per part, per-partition
+lineage + resume.
 
 Replaces the reference's only scaling mechanism — static modulo striping
 of the file list across subprocesses (tools/infer/predict_system.py:187,
@@ -7,10 +8,16 @@ handling, no resume) — with the north_rule's design:
 
 - **part_id** = ``pmod(xxhash64(url), N)``: a *logical*, content-derived
   partition id (stable across runs/cluster sizes) — the checkpoint and
-  lineage unit.
-- **salting**: physical distribution over ``(part_id, pmod(xxhash64(url,
-  seed), salt))`` so a hot logical partition (Zipf host skew) spreads
-  over ``salt`` reducers; AQE skew handling stays on as backstop.
+  lineage unit. Being a url hash it is already near-uniform over urls,
+  so host skew (many pages of one host) cannot make one part hot.
+- **routing**: ``repartitionById`` sends part ``k`` straight to shuffle
+  partition ``k`` (no second hash, and AQE does not coalesce a
+  ``REPARTITION_BY_NUM`` exchange), so each task writes exactly one file
+  into exactly one ``part_id=k/`` directory. ``salt`` > 1 splits every
+  part over ``salt`` tasks (``pmod(xxhash64(url, seed), salt)``) — worth
+  it only when the cluster has more task slots than logical parts. It
+  buys no skew balance: AQE skew splitting applies to joins, not to this
+  exchange, and a url's revisit captures share one salt key.
 - **lineage**: one row per completed partition (part_id, run_id,
   input_snapshot, row_count, extraction metrics) appended AFTER the
   partition's data commit. In production these are Iceberg table
@@ -51,9 +58,14 @@ def add_part_id(df: DataFrame, n_partitions: int) -> DataFrame:
 
 
 def salted_repartition(df: DataFrame, n_partitions: int, salt: int) -> DataFrame:
-    """Spread each logical partition across ``salt`` shuffle keys."""
-    salt_key = F.pmod(F.xxhash64("url", F.lit(SALT_SEED)), F.lit(max(salt, 1)))
-    return df.repartition(n_partitions, F.col("part_id"), salt_key)
+    """Route each logical partition to its own ``salt`` shuffle
+    partitions: task ``part_id * salt + k`` holds the part's urls with
+    ``pmod(xxhash64(url, seed), salt) == k``, so each task writes one
+    file into one ``part_id=`` directory."""
+    salt = max(salt, 1)
+    sub = F.pmod(F.xxhash64("url", F.lit(SALT_SEED)), F.lit(salt))
+    task = (F.col("part_id") * salt + sub).cast("int")
+    return df.repartitionById(n_partitions * salt, task)
 
 
 def _is_warehouse(input_path: str) -> bool:
@@ -138,7 +150,7 @@ def run_extract_job(
     output_dir: str,
     mode: str = "fused",
     n_partitions: int = 32,
-    salt: int = 8,
+    salt: int = 1,
     resume: bool = False,
     cfg: PipelineConfig = DEFAULT,
     only_first_parts: int | None = None,

@@ -102,7 +102,8 @@ def _wrapped_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     minimal page, so the REAL byte-stream pipeline (tokenizer pandas UDF
     + native stages) runs end-to-end on driver data. Spread so the
     Arrow UDF stage gets parallel batches regardless of the input file
-    layout (the production job does this with salted_repartition)."""
+    layout (the production job instead gives each url-hash logical part
+    its own task: plans/job.salted_repartition)."""
     from paddleocr_spark.functions.dedup import _spread
 
     d = _spread(_t(spark, sf_dir, "documents"), "doc_id")

@@ -1398,16 +1398,16 @@ group by lang
 
 
 # ---------------------------------------------------------------------------
-# Source skew audit: heavy-hitter shares (the salting decision input)
+# Source skew audit: heavy-hitter shares (the per-host cap input)
 # ---------------------------------------------------------------------------
 
 def q_source_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy-hitter audit: per-source document count, byte estimate,
-    and corpus share. This is the diagnostic that decides the skew
-    treatment in the extraction job — which hosts get salted keys
-    (plans/job.py repartitions on salted url-hash precisely because a
-    handful of hosts dominate a web crawl) and what per-host cap
-    `source_cap` should use.
+    and corpus share. This is the diagnostic that decides what per-host
+    cap `source_cap` should use. The extraction job needs no per-host
+    treatment: its logical parts hash the url, not the host
+    (plans/job.py), so a handful of hosts dominating a web crawl still
+    spread evenly over the parts.
 
     Scale shape: one groupBy on source (the same shuffle key the cap
     query needs), then the corpus total joins back as a broadcast

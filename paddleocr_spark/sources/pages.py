@@ -14,7 +14,8 @@ Pathological rows exercised (FIXTURES.md §1):
   pass detection (CTC blank drop), exact-threshold scores (0.6 boundary),
   empty bodies, giant single blocks (chunk split + rejoin), two-column
   layout sections with fragmented boxes, tables with stray fragments,
-  Zipf-skewed hosts (salting), and 'ar' pages (RTL run reversal).
+  Zipf-skewed hosts (url-hash parts stay balanced), and 'ar' pages (RTL
+  run reversal).
 """
 
 from __future__ import annotations
@@ -162,7 +163,7 @@ def gen_page(i: int, profile: str = "base") -> dict:
     rnd = random.Random(_seed_for(i))
     r = rnd.random()
     lang = "en" if r < 0.7 else ("zh" if r < 0.9 else "ar")
-    # Zipf-ish host skew: host 0 is hot (exercises salting)
+    # Zipf-ish host skew: host 0 is hot (url-hash parts must stay balanced)
     host = int(200 * (rnd.random() ** 3))
     url = f"https://host{host}.example/p/{i}"
     html = _make_html(i, rnd, lang, PROFILES[profile])

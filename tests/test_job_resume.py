@@ -165,3 +165,44 @@ def test_blocklist_prunes_before_parsing(spark, smoke_dir, tmp_path):
     blf.write_text("# comment\na.com\n\nb.com\n")
     assert parse_blocklist(str(blf)) == ["a.com", "b.com"]
     assert parse_blocklist(None) == []
+
+
+def _files_per_part(out_dir):
+    data = os.path.join(out_dir, "extracted")
+    return {
+        d: len([f for f in os.listdir(os.path.join(data, d)) if f.endswith(".parquet")])
+        for d in os.listdir(data)
+        if d.startswith("part_id=")
+    }
+
+
+def test_one_task_and_file_per_part(spark, smoke_dir, tmp_path, monkeypatch):
+    """Each logical part is routed straight to its own shuffle partition
+    (repartitionById, no hash exchange), so the default job writes one
+    file per part_id directory and salt=k splits a part over k files
+    without changing any url's text."""
+    from paddleocr_spark.plans import job
+
+    inp = os.path.join(smoke_dir, "pages.parquet")
+    frames = []
+
+    def recording(df, cfg):
+        out = job.extract_fused(df, cfg)
+        frames.append(out)
+        return out
+
+    monkeypatch.setitem(job._EXTRACTORS, "fused", recording)
+    one_dir = str(tmp_path / "salt1")
+    run_extract_job(spark, inp, one_dir, n_partitions=8)
+    assert _files_per_part(one_dir) == {f"part_id={k}": 1 for k in range(8)}
+
+    plan = frames[0]._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("shufflepartitionidpassthrough") == 1, plan
+    below = plan[plan.index("MapInPandas"):]
+    assert "Exchange hashpartitioning" not in below, plan
+
+    two_dir = str(tmp_path / "salt2")
+    run_extract_job(spark, inp, two_dir, n_partitions=8, salt=2)
+    counts = _files_per_part(two_dir)
+    assert len(counts) == 8 and max(counts.values()) <= 2, counts
+    assert _read_sorted(spark, two_dir) == _read_sorted(spark, one_dir)
